@@ -184,17 +184,3 @@ class CheckSpec:
                 self.valid_max_length,
             )
         )
-
-
-def passes_with_percent(spec: "CheckSpec", value, row_count):
-    """(ok, compare_value): threshold evaluation honoring percent
-    thresholds — the single shared rule for every lane (batch,
-    incremental, tail, partitioned, sliced). A percent threshold on a
-    missing/invalid count compares value/row_count*100 (6dp), matching
-    the batch executor's _evaluate."""
-    is_percent = bool(spec.threshold_is_percent) and spec.metric in (
-        MetricType.MISSING_COUNT, MetricType.INVALID_COUNT)
-    compare = value
-    if is_percent and value is not None:
-        compare = round(value / row_count * 100, 6) if row_count else 0.0
-    return spec.threshold.passes(compare), compare

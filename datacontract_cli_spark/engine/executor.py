@@ -4,7 +4,9 @@ Execution model (Spark-first, scale-aware):
 
 - **One batched aggregation per model.** Every ROW_COUNT / MISSING_COUNT /
   INVALID_COUNT / FRESHNESS / RETENTION metric of a model compiles into a
-  named aggregate expression and they all run as a single ``df.agg(*exprs)``
+  named aggregate expression (the metric plan, ``engine/metric_plan.py``,
+  shared with every other validation lane; so is its evaluator) and they
+  all run as a single ``df.agg(*exprs)``
   job (the reference batches the count metrics the same way:
   datacontract/engines/ibis/ibis_check_execute.py:254-327; we additionally
   fold freshness/retention MAX/MIN into the same pass). Catalyst executes it
@@ -31,51 +33,50 @@ import datetime as dt
 import json
 import logging
 import math
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
 from datacontract_cli_spark.checks.physical import physical_types_match
-from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op, Threshold
+from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
 from datacontract_cli_spark.checks.types import (
     normalize_type_name,
     property_matches,
     spark_type_to_property,
 )
-from datacontract_cli_spark.engine.predicates import (
-    _q,
-    count_if,
-    describe_condition,
-    invalid_condition,
-    missing_condition,
-    resolve_column,
+from datacontract_cli_spark.engine.metric_plan import (
+    AGGREGABLE,
+    ROW_COUNT_ALIAS,
+    SUMMED,
+    Metric,
+    aggregates,
+    evaluate,
+    fail_result,
+    key_columns,
+    plan_metrics,
 )
+from datacontract_cli_spark.engine.predicates import _q, resolve_column
 from datacontract_cli_spark.model.contract import DataContract, SchemaObject, Server
 from datacontract_cli_spark.model.run import Check, ResultEnum, Run
 
 logger = logging.getLogger(__name__)
 
-_WARNING_SEVERITIES = {"info", "warning", "warn", "low", "minor", "trivial"}
-
 _SENSITIVE_CLASSIFICATIONS = {"sensitive", "pii", "restricted", "confidential", "secret"}
 
-_AGG_METRICS = (
-    MetricType.ROW_COUNT,
-    MetricType.MISSING_COUNT,
-    MetricType.INVALID_COUNT,
-    MetricType.FRESHNESS,
-    MetricType.RETENTION,
-    MetricType.QUANTILE,
-)
 
-_ROW_COUNT_ALIAS = "__dc_row_count__"
+def _folded_value(spec: CheckSpec, folded: Dict[str, Any]) -> Any:
+    """A spec's value in a lane's fold; manifests written before row-count
+    specs were keyed carry only ``row_count``."""
+    return folded.get(spec.key, folded.get("row_count")
+                      if spec.metric is MetricType.ROW_COUNT else None)
 
 
-def _fail_result(spec: CheckSpec) -> ResultEnum:
-    severity = (spec.severity or "").strip().lower()
-    return ResultEnum.warning if severity in _WARNING_SEVERITIES else ResultEnum.failed
+def _not_present(spec: CheckSpec) -> str:
+    # a column absent from the validated files is an ERROR, never a
+    # passing zero — the batch lane fails the same check
+    return f"column '{spec.field}' not present in the validated files"
 
 
 class SparkContractEngine:
@@ -246,78 +247,37 @@ class SparkContractEngine:
         rest)."""
         from datacontract_cli_spark.engine.partitioned import PartitionedValidator
 
-        specs = [s for s in compile_checks(contract, None) if s.model == model]
-        runnable = [s for s in specs if s.metric in
-                    (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
-                     MetricType.INVALID_COUNT, MetricType.DUPLICATE_COUNT)]
-        # per-bucket duplicate-group counts only SUM correctly when rows
-        # sharing the duplicate key land in one bucket — i.e. the
-        # partition key is part of the duplicate key. Anything else would
-        # silently under-count (two equal emails in different conv_id
-        # buckets each count zero), so it is an error here, not a pass.
-        unroutable = [
-            s for s in runnable if s.metric is MetricType.DUPLICATE_COUNT
-            and partition_key not in (s.columns or
-                                      ([s.field] if s.field else []))]
-        runnable = [s for s in runnable if s not in unroutable]
+        specs = self._lane_specs(contract, model,
+                                 SUMMED + (MetricType.DUPLICATE_COUNT,))
         pv = PartitionedValidator(self.spark, checkpoint_dir=checkpoint_dir,
                                   partition_key=partition_key, n_buckets=n_buckets)
-        verdicts = pv.run(df, runnable, model, source_path=source_path)
-        folded = PartitionedValidator.fold(verdicts, specs=runnable)
+        verdicts = pv.run(df, specs, model, source_path=source_path)
+        folded = PartitionedValidator.fold(verdicts, specs=specs)
+        # a spec that errored in its buckets carries the validator's
+        # reason; one that evaluated in no bucket had an absent column
+        errors = pv.spec_errors(df, specs, model)
+        errored = {k for k, r in folded["results"].items() if r == "error"}
 
-        run = Run(dataContractId=contract.id, dataContractVersion=contract.version)
-        for spec in unroutable:
-            check = Check(key=spec.key, category=spec.category,
-                          type=spec.type, name=spec.name, model=spec.model,
-                          field=spec.field, language="spark-sql",
-                          dimension=spec.dimension)
-            check.result = ResultEnum.error
-            check.reason = (
-                f"uniqueness on {spec.columns or [spec.field]} cannot be "
-                f"folded per-bucket when the partition key "
-                f"{partition_key!r} is not part of the duplicate key — "
-                "run it through test() (the batched lane is exact)")
-            run.checks.append(check)
-        for spec in runnable:
-            check = Check(key=spec.key, category=spec.category, type=spec.type,
-                          name=spec.name, model=spec.model, field=spec.field,
-                          language="spark-sql", dimension=spec.dimension)
-            # global verdict from the folded metric (exact: counts sum across
-            # buckets); per-bucket verdicts stay in diagnostics/manifest
-            value = folded["metrics"].get(
-                spec.key, folded["metrics"].get("row_count")
-                if spec.metric is MetricType.ROW_COUNT else None)
+        def diagnostics(spec, value):
             if value is None:
-                # the spec never evaluated in any bucket (absent column):
-                # an honest error, same as the incremental lane — not a
-                # fail with a misleading '0 of N partitions' reason
-                check.result = ResultEnum.error
-                check.reason = (f"{spec.metric.value}({spec.field}) was "
-                                "not evaluated in any partition (column "
-                                "absent?)")
-                check.diagnostics = {"metric": spec.metric.value,
-                                     "value": None}
-                run.checks.append(check)
-                continue
-            if spec.threshold is not None:
-                ok, _ = self._passes_with_percent(
-                    spec, value, folded["metrics"].get("row_count"))
-                check.result = (ResultEnum.passed if ok
-                                else _fail_result(spec))
-            check.diagnostics = {
-                "metric": spec.metric.value,
-                "value": value,
-                "n_buckets": folded["n_buckets_validated"],
-                "failed_buckets": sorted(
-                    b for b, v in verdicts.items()
-                    if v.results.get(spec.key) == "failed"
-                ),
-            }
+                return {"metric": spec.metric.value, "value": None}
+            return {"metric": spec.metric.value, "value": value,
+                    "n_buckets": folded["n_buckets_validated"],
+                    "failed_buckets": sorted(
+                        b for b, v in verdicts.items()
+                        if v.results.get(spec.key) == "failed")}
+
+        run = self._lane_run(
+            contract, specs, folded["metrics"], errored,
+            lambda s: errors.get(s.key) or (
+                f"{s.metric.value}({s.field}) was not evaluated in any "
+                "partition (column absent?)"),
+            diagnostics)
+        for check in run.checks:
             if check.result is ResultEnum.failed:
                 check.reason = (f"{len(check.diagnostics['failed_buckets'])} of "
                                 f"{folded['n_buckets_validated']} partitions failed "
-                                f"{spec.metric.value}({spec.field or spec.model})")
-            run.checks.append(check)
+                                f"{check.diagnostics['metric']}({check.field or check.model})")
         return run.finish(), verdicts
 
     def test_incremental(
@@ -342,10 +302,7 @@ class SparkContractEngine:
         Iceberg snapshot id or a Delta version)."""
         from datacontract_cli_spark.engine.incremental import IncrementalValidator
 
-        specs = [s for s in compile_checks(contract, None) if s.model == model
-                 and s.metric in (MetricType.ROW_COUNT,
-                                  MetricType.MISSING_COUNT,
-                                  MetricType.INVALID_COUNT)]
+        specs = self._lane_specs(contract, model, SUMMED)
         iv = IncrementalValidator(self.spark, checkpoint_dir)
         if table_format == "iceberg":
             result = iv.run_iceberg(path, specs, model,
@@ -354,39 +311,18 @@ class SparkContractEngine:
             result = iv.run_delta(path, specs, model, version=snapshot_id)
         else:
             result = iv.run(path, specs, model)
-        run = Run(dataContractId=contract.id,
-                  dataContractVersion=contract.version)
-        unevaluated = set(result.get("unevaluated") or [])
-        for spec in specs:
-            check = Check(key=spec.key, category=spec.category, type=spec.type,
-                          name=spec.name, model=spec.model, field=spec.field,
-                          language="spark-sql", dimension=spec.dimension)
-            if spec.key in unevaluated:
-                # a column absent from the validated files is an ERROR,
-                # never a passing zero — the batch lane errors the same way
-                check.result = ResultEnum.error
-                check.reason = (f"column '{spec.field}' not present in the "
-                                "validated files")
-                check.diagnostics = {"metric": spec.metric.value,
-                                     "value": None,
-                                     "n_files": len(result["files"])}
-                run.checks.append(check)
-                continue
-            value = result["folded"].get(
-                spec.key, result["folded"]["row_count"]
-                if spec.metric is MetricType.ROW_COUNT else 0)
-            if spec.threshold is not None:
-                ok, _ = self._passes_with_percent(
-                    spec, value, result["folded"].get("row_count"))
-                check.result = (ResultEnum.passed if ok
-                                else _fail_result(spec))
-            check.diagnostics = {
-                "metric": spec.metric.value, "value": value,
-                "n_files": len(result["files"]),
-                "n_new_files": len(result["new_files"]),
-                "n_removed_files": len(result["removed_files"]),
-            }
-            run.checks.append(check)
+
+        def diagnostics(spec, value):
+            d = {"metric": spec.metric.value, "value": value,
+                 "n_files": len(result["files"])}
+            if value is not None:
+                d.update(n_new_files=len(result["new_files"]),
+                         n_removed_files=len(result["removed_files"]))
+            return d
+
+        run = self._lane_run(contract, specs, result["folded"],
+                             set(result["unevaluated"]), _not_present,
+                             diagnostics)
         return run.finish(), result
 
     def tail(
@@ -407,10 +343,7 @@ class SparkContractEngine:
         only, same contract subset as :meth:`test_incremental`."""
         from datacontract_cli_spark.engine.incremental import SnapshotTailer
 
-        specs = [s for s in compile_checks(contract, None) if s.model == model
-                 and s.metric in (MetricType.ROW_COUNT,
-                                  MetricType.MISSING_COUNT,
-                                  MetricType.INVALID_COUNT)]
+        specs = self._lane_specs(contract, model, SUMMED)
         tailer = SnapshotTailer(self.spark, checkpoint_dir)
         if table_format == "delta":
             polled = tailer.poll_delta(path, specs, model)
@@ -423,64 +356,72 @@ class SparkContractEngine:
             sid = result.get("snapshot_id",
                              result.get("delta_version",
                                         result.get("poll")))
-            run = Run(dataContractId=contract.id,
-                      dataContractVersion=contract.version)
             if result.get("error"):
                 # unreadable version (e.g. vacuumed history) — one error
                 # verdict, never a silent skip
-                for spec in specs:
-                    check = Check(key=spec.key, category=spec.category,
-                                  type=spec.type, name=spec.name,
-                                  model=spec.model, field=spec.field,
-                                  language="spark-sql",
-                                  dimension=spec.dimension)
-                    check.result = ResultEnum.error
-                    check.reason = result["error"]
-                    run.checks.append(check)
+                run = self._lane_run(contract, specs, {}, set(),
+                                     lambda s: result["error"],
+                                     lambda s, v: None)
                 out.append((sid, run.finish(), result))
                 continue
-            maintenance = result.get("data_change") is False
-            unevaluated = set(result.get("unevaluated") or [])
-            for spec in specs:
-                check = Check(key=spec.key, category=spec.category,
-                              type=spec.type, name=spec.name,
-                              model=spec.model, field=spec.field,
-                              language="spark-sql", dimension=spec.dimension)
-                if spec.key in unevaluated:
-                    check.result = ResultEnum.error
-                    check.reason = (f"column '{spec.field}' not present in "
-                                    "the validated files")
-                    check.diagnostics = {"metric": spec.metric.value,
-                                         "value": None, "snapshot_id": sid}
-                    run.checks.append(check)
-                    continue
-                value = result["delta"].get(
-                    spec.key, result["delta"]["row_count"]
-                    if spec.metric is MetricType.ROW_COUNT else 0)
-                if maintenance:
-                    # compaction / OPTIMIZE rewrites files without
-                    # changing rows: its delta is 0-or-negative by
-                    # construction, so threshold-gating it would fail a
-                    # CI tail on every routine maintenance commit
-                    check.result = ResultEnum.passed
-                    check.reason = ("maintenance commit (no data "
-                                    "change); thresholds not applied")
-                elif spec.threshold is not None:
-                    ok, _ = self._passes_with_percent(
-                        spec, value, result["delta"].get("row_count"))
-                    check.result = (ResultEnum.passed if ok
-                                    else _fail_result(spec))
-                check.diagnostics = {
-                    "metric": spec.metric.value, "value": value,
-                    "cumulative": result["folded"].get(
-                        spec.key, result["folded"]["row_count"]
-                        if spec.metric is MetricType.ROW_COUNT else 0),
-                    "snapshot_id": sid,
-                    "n_new_files": len(result["new_files"]),
-                }
-                run.checks.append(check)
+
+            def diagnostics(spec, value):
+                if value is None:
+                    return {"metric": spec.metric.value, "value": None,
+                            "snapshot_id": sid}
+                return {"metric": spec.metric.value, "value": value,
+                        "cumulative": _folded_value(spec, result["folded"]),
+                        "snapshot_id": sid,
+                        "n_new_files": len(result["new_files"])}
+
+            run = self._lane_run(contract, specs, result["delta"],
+                                 set(result["unevaluated"]), _not_present,
+                                 diagnostics)
+            if result.get("data_change") is False:
+                # compaction / OPTIMIZE rewrites files without changing
+                # rows: its delta is 0-or-negative by construction, so
+                # threshold-gating it would fail a CI tail on every
+                # routine maintenance commit
+                for check in run.checks:
+                    if check.result is not ResultEnum.error:
+                        check.result = ResultEnum.passed
+                        check.reason = ("maintenance commit (no data "
+                                        "change); thresholds not applied")
             out.append((sid, run.finish(), result))
         return out
+
+    @staticmethod
+    def _lane_specs(contract: DataContract, model: str,
+                    metrics) -> List[CheckSpec]:
+        return [s for s in compile_checks(contract, None)
+                if s.model == model and s.metric in metrics]
+
+    @staticmethod
+    def _lane_run(contract: DataContract, specs: List[CheckSpec],
+                  folded: Dict[str, Any], unevaluated, absent,
+                  diagnostics) -> Run:
+        """The Run of a folding lane. Each spec's folded value is judged by
+        the metric plan's evaluator (percent rates over the fold's
+        ``row_count``); a spec in ``unevaluated`` or without a value is
+        an error carrying ``absent(spec)``, never a passing zero.
+        ``diagnostics(spec, value)`` is the lane's diagnostics record
+        (value None on errors)."""
+        run = Run(dataContractId=contract.id,
+                  dataContractVersion=contract.version)
+        for spec in specs:
+            check = Check(key=spec.key, category=spec.category, type=spec.type,
+                          name=spec.name, model=spec.model, field=spec.field,
+                          language="spark-sql", dimension=spec.dimension)
+            value = _folded_value(spec, folded)
+            if spec.key in unevaluated or value is None:
+                check.result, check.reason = ResultEnum.error, absent(spec)
+                value = None
+            else:
+                check.result = evaluate(spec, value,
+                                        folded.get("row_count")).result
+            check.diagnostics = diagnostics(spec, value)
+            run.checks.append(check)
+        return run
 
     # ------------------------------------------------------------------
     # filtering
@@ -572,7 +513,7 @@ class SparkContractEngine:
                     run.set_result(spec.key, ResultEnum.error, f"Invalid row filter: {e}")
                 return
 
-        agg_specs = [s for s in scan_specs if s.metric in _AGG_METRICS]
+        agg_specs = [s for s in scan_specs if s.metric in AGGREGABLE]
         dup_specs = [s for s in scan_specs if s.metric is MetricType.DUPLICATE_COUNT]
         sql_specs = [s for s in scan_specs if s.metric is MetricType.CUSTOM_SQL]
         ri_specs = [s for s in scan_specs if s.metric is MetricType.REFERENTIAL_INTEGRITY]
@@ -617,60 +558,16 @@ class SparkContractEngine:
     # ------------------------------------------------------------------
     # the batched aggregation
     # ------------------------------------------------------------------
-    def _build_agg_exprs(self, run: Run, model: str, specs: List[CheckSpec],
-                         df: DataFrame):
-        """Compile the agg-able specs into one expression batch. Returns
-        (exprs, expr_by_alias, evaluators, constant_zero, sample_conds)."""
-        exprs = [F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)]
-        expr_by_alias: Dict[str, Any] = {}  # alias -> agg expr (error-isolation retry path)
-        evaluators: List[Tuple[CheckSpec, str]] = []  # (spec, result column alias)
-        constant_zero: List[CheckSpec] = []
-        sample_conds: Dict[str, Any] = {}
-
-        def _add(expr, alias: str) -> None:
-            exprs.append(expr)
-            expr_by_alias[alias] = expr
-
-        for i, spec in enumerate(specs):
-            alias = f"__dc_m{i}__"
-            if spec.metric is MetricType.ROW_COUNT:
-                evaluators.append((spec, _ROW_COUNT_ALIAS))
-                continue
-            column = resolve_column(df, spec.field) if spec.field else None
-            if spec.field and column is None:
-                run.set_result(spec.key, _fail_result(spec),
-                               f"Column '{spec.field}' not found in model {model}")
-                continue
-            if spec.metric is MetricType.MISSING_COUNT:
-                cond = missing_condition(df, column, spec)
-                _add(count_if(cond, alias), alias)
-                evaluators.append((spec, alias))
-                sample_conds[spec.key] = (column, cond)
-            elif spec.metric is MetricType.INVALID_COUNT:
-                cond = invalid_condition(df, column, spec)
-                if cond is None:
-                    constant_zero.append(spec)  # no constraints ⇒ 0 without querying
-                else:
-                    _add(count_if(cond, alias), alias)
-                    evaluators.append((spec, alias))
-                    sample_conds[spec.key] = (column, cond)
-            elif spec.metric is MetricType.FRESHNESS:
-                _add(F.max(F.col(_q(column))).alias(alias), alias)
-                evaluators.append((spec, alias))
-            elif spec.metric is MetricType.RETENTION:
-                _add(F.min(F.col(_q(column))).alias(alias), alias)
-                evaluators.append((spec, alias))
-            elif spec.metric is MetricType.QUANTILE:
-                q = float(spec.quantile if spec.quantile is not None else 0.5)
-                # approx (t-digest-style sketch, fixed memory) is the 100 TB
-                # default; arguments.exact=true opts into the exact
-                # interpolated percentile (buffers the column per group)
-                expr = (F.percentile(F.col(_q(column)), F.lit(q))
-                        if spec.quantile_exact
-                        else F.percentile_approx(F.col(_q(column)), q, 10000))
-                _add(expr.alias(alias), alias)
-                evaluators.append((spec, alias))
-        return exprs, expr_by_alias, evaluators, constant_zero, sample_conds
+    def _plan_batch(self, run: Run, model: str, specs: List[CheckSpec],
+                    df: DataFrame) -> List[Metric]:
+        """The model's metric plan; a spec whose column is absent fails
+        here and leaves the batch."""
+        metrics = plan_metrics(df, specs)
+        for m in metrics:
+            if not m.resolved:
+                run.set_result(m.spec.key, fail_result(m.spec),
+                               f"Column '{m.spec.field}' not found in model {model}")
+        return [m for m in metrics if m.resolved]
 
     def _run_agg_with_duplicates(self, run: Run, model: str,
                                  agg_specs: List[CheckSpec],
@@ -686,18 +583,22 @@ class SparkContractEngine:
         per PK group (measured ~800 MB vs ~240 MB keys-only, 2.4s -> 1.4s
         on the 8M-turn transcripts validation locally). Falls back to the
         separate sequential path (which has per-check error isolation) on
-        any failure."""
+        any failure.
+
+        The metric job and the uniqueness job scan the source separately,
+        so both assume the batch source does not change between the two
+        scans and the frame has no non-deterministic expressions;
+        otherwise the metrics and the duplicate count may describe
+        different data."""
         lead = dup_specs[0]
-        lead_cols = lead.columns or ([lead.field] if lead.field else [])
-        resolved = [resolve_column(df, c) for c in lead_cols]
+        resolved = [resolve_column(df, c) for c in key_columns(lead)]
         if not resolved or any(c is None for c in resolved):
             self._run_agg_batch(run, model, agg_specs, df, obj)
             for spec in dup_specs:
                 self._check_duplicates(run, spec, df, obj)
             return
 
-        exprs, expr_by_alias, evaluators, constant_zero, sample_conds = \
-            self._build_agg_exprs(run, model, agg_specs, df)
+        metrics = self._plan_batch(run, model, agg_specs, df)
         dup_alias = "__dc_dup__"
         kind_alias = "__dc_kind__"
         skey_alias = "__dc_skey__"
@@ -720,21 +621,21 @@ class SparkContractEngine:
             # the scan stage of the agg job leaves idle (guide-style
             # overlap; measured 1.65s sequential → 1.38s overlapped).
             grouped = (df.groupBy(*[F.col(_q(c)) for c in resolved])
-                       .agg(F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)))
+                       .agg(F.count(F.lit(1)).alias(ROW_COUNT_ALIAS)))
             combined = (grouped.agg(F.coalesce(
-                F.sum(F.when(F.col(_ROW_COUNT_ALIAS) > 1, 1).otherwise(0)),
+                F.sum(F.when(F.col(ROW_COUNT_ALIAS) > 1, 1).otherwise(0)),
                 F.lit(0)).alias(dup_alias))
                 .withColumn(kind_alias, F.lit("fold")))
             if sample_keys:
                 samples_branch = (
-                    grouped.filter(F.col(_ROW_COUNT_ALIAS) > 1)
+                    grouped.filter(F.col(ROW_COUNT_ALIAS) > 1)
                     .orderBy(*[F.col(c) for c in resolved])
                     .limit(self.sample_limit)
                     .select(
                         F.to_json(F.struct(
                             *self._sample_struct_cols(df, sample_keys))
                         ).alias(skey_alias),
-                        F.col(_ROW_COUNT_ALIAS).alias(sdup_alias),
+                        F.col(ROW_COUNT_ALIAS).alias(sdup_alias),
                         F.lit(None).cast("long").alias(dup_alias),
                         F.lit("dup").alias(kind_alias),
                     )
@@ -745,7 +646,8 @@ class SparkContractEngine:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=2) as pool:
-                agg_future = pool.submit(lambda: df.agg(*exprs).collect())
+                agg_future = pool.submit(
+                    lambda: df.agg(*aggregates(metrics)).collect())
                 dup_future = pool.submit(combined.collect)
                 collected = dup_future.result()
                 row = agg_future.result()[0].asDict()
@@ -764,8 +666,7 @@ class SparkContractEngine:
                     run.set_result(spec.key, ResultEnum.error,
                                    f"Duplicate check failed: {dup_err}")
             return
-        self._evaluate_agg_row(run, row, evaluators, constant_zero,
-                               sample_conds, df, obj)
+        self._evaluate_agg_row(run, row, metrics, df, obj)
         self._evaluate(run, lead, int(row[dup_alias]), None)
         check = run.check(lead.key)
         if (self.include_failed_samples and check is not None
@@ -789,11 +690,10 @@ class SparkContractEngine:
                        df: DataFrame, obj: Optional[SchemaObject]) -> None:
         if not specs:
             return
-        exprs, expr_by_alias, evaluators, constant_zero, sample_conds = \
-            self._build_agg_exprs(run, model, specs, df)
+        metrics = self._plan_batch(run, model, specs, df)
 
         try:
-            row = df.agg(*exprs).collect()[0].asDict()
+            row = df.agg(*aggregates(metrics)).collect()[0].asDict()
         except Exception as batch_err:  # noqa: BLE001
             # One bad constraint (e.g. an invalid regex raising inside rlike at
             # execution time) must not abort the whole run: the reference
@@ -803,38 +703,29 @@ class SparkContractEngine:
             logger.warning("batched aggregation failed, isolating per-check: %s", batch_err)
             row = {}
             try:
-                row[_ROW_COUNT_ALIAS] = df.agg(exprs[0]).collect()[0][0]
+                row[ROW_COUNT_ALIAS] = df.agg(*aggregates([])).collect()[0][0]
             except Exception as e:  # noqa: BLE001
-                for spec, _ in evaluators:
-                    run.set_result(spec.key, ResultEnum.error, f"Aggregation failed: {e}")
-                for spec in constant_zero:
-                    run.set_result(spec.key, ResultEnum.error, f"Aggregation failed: {e}")
+                for m in metrics:
+                    run.set_result(m.spec.key, ResultEnum.error, f"Aggregation failed: {e}")
                 return
-            for spec, alias in list(evaluators):
-                if alias == _ROW_COUNT_ALIAS:
+            for m in list(metrics):
+                if m.agg is None:
                     continue
                 try:
-                    row[alias] = df.agg(expr_by_alias[alias]).collect()[0][0]
+                    row[m.alias] = df.agg(m.agg).collect()[0][0]
                 except Exception as e:  # noqa: BLE001
-                    run.set_result(spec.key, ResultEnum.error, f"Check aggregation failed: {e}")
-                    evaluators.remove((spec, alias))
-                    sample_conds.pop(spec.key, None)
-        self._evaluate_agg_row(run, row, evaluators, constant_zero,
-                               sample_conds, df, obj)
+                    run.set_result(m.spec.key, ResultEnum.error, f"Check aggregation failed: {e}")
+                    metrics.remove(m)
+        self._evaluate_agg_row(run, row, metrics, df, obj)
 
     def _evaluate_agg_row(self, run: Run, row: Dict[str, Any],
-                          evaluators: List[Tuple[CheckSpec, str]],
-                          constant_zero: List[CheckSpec],
-                          sample_conds: Dict[str, Any],
+                          metrics: List[Metric],
                           df: DataFrame, obj: Optional[SchemaObject]) -> None:
-        row_count = int(row[_ROW_COUNT_ALIAS])
+        row_count = int(row[ROW_COUNT_ALIAS])
 
-        for spec in constant_zero:
-            self._evaluate(run, spec, 0, row_count)
-
-        failed_sample_keys = []
-        for spec, alias in evaluators:
-            value = row[alias]
+        failed: List[Metric] = []
+        for m in metrics:
+            spec, value = m.spec, m.value(row)
             if spec.metric in (MetricType.FRESHNESS, MetricType.RETENTION):
                 self._evaluate_timestamp_sla(run, spec, value)
                 continue
@@ -848,28 +739,24 @@ class SparkContractEngine:
             check = run.check(spec.key)
             if (self.include_failed_samples and check is not None
                     and check.result in (ResultEnum.failed, ResultEnum.warning)
-                    and spec.key in sample_conds):
-                failed_sample_keys.append(spec)
+                    and m.predicate is not None):
+                failed.append(m)
 
-        if len(failed_sample_keys) > 1:
+        if len(failed) > 1:
             try:
-                self._collect_samples_batch(
-                    run, [(s, sample_conds[s.key]) for s in failed_sample_keys],
-                    df, obj)
+                self._collect_samples_batch(run, failed, df, obj)
                 return
             except Exception as e:  # noqa: BLE001
                 logger.warning("batched sample collection failed (%s); "
                                "isolating per-check", e)
-        for spec in failed_sample_keys:
-            column, cond = sample_conds[spec.key]
+        for m in failed:
             try:
-                self._collect_samples(run, spec, df, cond, column, obj)
+                self._collect_samples(run, m.spec, df, m.predicate, m.column, obj)
             except Exception as e:  # noqa: BLE001 — diagnostics only
                 logger.warning("sample collection failed for %s: %s",
-                               spec.key, e)
+                               m.spec.key, e)
 
-    def _collect_samples_batch(self, run: Run,
-                               specs_conds: List[Tuple[CheckSpec, Any]],
+    def _collect_samples_batch(self, run: Run, metrics: List[Metric],
                                df: DataFrame,
                                obj: Optional[SchemaObject]) -> None:
         """Violation samples for EVERY failed check in one Spark job.
@@ -885,7 +772,8 @@ class SparkContractEngine:
         branches = []
         tagged: Dict[str, List[Dict[str, Any]]] = {}
         cols_by_key: Dict[str, List[str]] = {}
-        for spec, (column, cond) in specs_conds:
+        for m in metrics:
+            spec, column, cond = m.spec, m.column, m.predicate
             cols: List[str] = []
             for c in ids + [column]:
                 if c not in cols:
@@ -912,17 +800,17 @@ class SparkContractEngine:
         for r in combined.collect():
             tagged[r["__dc_tag__"]].append(
                 self._parse_sample(r["__dc_rec__"], cols_by_key[r["__dc_tag__"]]))
-        for spec, _ in specs_conds:
-            check = run.check(spec.key)
-            if check is not None and spec.key in tagged:
-                check.failedSamples = tagged[spec.key]
+        for m in metrics:
+            check = run.check(m.spec.key)
+            if check is not None and m.spec.key in tagged:
+                check.failedSamples = tagged[m.spec.key]
 
     # ------------------------------------------------------------------
     # dedicated jobs
     # ------------------------------------------------------------------
     def _check_duplicates(self, run: Run, spec: CheckSpec, df: DataFrame,
                           obj: Optional[SchemaObject]) -> None:
-        cols = spec.columns or ([spec.field] if spec.field else None)
+        cols = key_columns(spec)
         if not cols:
             run.set_result(spec.key, ResultEnum.error, "duplicate check has no columns")
             return
@@ -930,7 +818,7 @@ class SparkContractEngine:
         for c in cols:
             r = resolve_column(df, c)
             if r is None:
-                run.set_result(spec.key, _fail_result(spec),
+                run.set_result(spec.key, fail_result(spec),
                                f"Column '{c}' not found in model {spec.model}")
                 return
             resolved.append(r)
@@ -1038,7 +926,7 @@ class SparkContractEngine:
         child_col = resolve_column(df, spec.field)
         parent_col = resolve_column(parent, spec.ref_field)
         if child_col is None or parent_col is None:
-            run.set_result(spec.key, _fail_result(spec), "Referenced column not found")
+            run.set_result(spec.key, fail_result(spec), "Referenced column not found")
             return
         from datacontract_cli_spark.operators.refintegrity import orphan_count
         try:
@@ -1051,7 +939,7 @@ class SparkContractEngine:
     def _check_drift(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
         column = resolve_column(df, spec.field)
         if column is None:
-            run.set_result(spec.key, _fail_result(spec),
+            run.set_result(spec.key, fail_result(spec),
                            f"Column '{spec.field}' not found in model {spec.model}")
             return
         from datacontract_cli_spark.operators import drift
@@ -1074,14 +962,14 @@ class SparkContractEngine:
         a map-side-combining groupBy, O(runs) over the wire)."""
         key = resolve_column(df, spec.field)
         if key is None:
-            run.set_result(spec.key, _fail_result(spec),
+            run.set_result(spec.key, fail_result(spec),
                            f"Column '{spec.field}' not found in model {spec.model}")
             return
         missing = [c for c in (spec.extra["order_cols"]
                                + spec.extra["action_cols"])
                    if resolve_column(df, c) is None]
         if missing:
-            run.set_result(spec.key, _fail_result(spec),
+            run.set_result(spec.key, fail_result(spec),
                            f"Columns {missing} not found in model {spec.model}")
             return
         from datacontract_cli_spark.operators.convchecks import run_lengths
@@ -1108,13 +996,13 @@ class SparkContractEngine:
         if present:
             run.set_result(spec.key, ResultEnum.passed, None)
         else:
-            run.set_result(spec.key, _fail_result(spec),
+            run.set_result(spec.key, fail_result(spec),
                            f"Field '{spec.field}' is missing in model {spec.model}")
 
     def _check_type(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
         column = resolve_column(df, spec.field)
         if column is None:
-            run.set_result(spec.key, _fail_result(spec),
+            run.set_result(spec.key, fail_result(spec),
                            f"Column '{spec.field}' not found in model {spec.model}")
             return
         actual = spark_type_to_property(column, df.schema[column].dataType)
@@ -1128,12 +1016,12 @@ class SparkContractEngine:
         if ok:
             run.set_result(spec.key, ResultEnum.passed, None)
         else:
-            run.set_result(spec.key, _fail_result(spec), reason)
+            run.set_result(spec.key, fail_result(spec), reason)
 
     def _check_physical_type(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
         column = resolve_column(df, spec.field)
         if column is None:
-            run.set_result(spec.key, _fail_result(spec),
+            run.set_result(spec.key, fail_result(spec),
                            f"Column '{spec.field}' not found in model {spec.model}")
             return
         actual = df.schema[column].dataType.simpleString()
@@ -1153,7 +1041,7 @@ class SparkContractEngine:
             if exp_cat is not None and exp_cat == act_cat:
                 run.set_result(spec.key, ResultEnum.passed, None)
             else:
-                run.set_result(spec.key, _fail_result(spec),
+                run.set_result(spec.key, fail_result(spec),
                                f"Field '{spec.field}': expected physical type "
                                f"{spec.expected_physical_type}, actual {actual}")
         else:
@@ -1164,7 +1052,7 @@ class SparkContractEngine:
     def _check_nested_type(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
         column = resolve_column(df, spec.field)
         if column is None:
-            run.set_result(spec.key, _fail_result(spec),
+            run.set_result(spec.key, fail_result(spec),
                            f"Column '{spec.field}' not found in model {spec.model}")
             return
         actual = spark_type_to_property(column, df.schema[column].dataType)
@@ -1172,66 +1060,16 @@ class SparkContractEngine:
         if ok:
             run.set_result(spec.key, ResultEnum.passed, None)
         else:
-            run.set_result(spec.key, _fail_result(spec), reason)
+            run.set_result(spec.key, fail_result(spec), reason)
 
     # ------------------------------------------------------------------
     # evaluation + diagnostics (reference ibis_check_execute.py:943-989)
     # ------------------------------------------------------------------
-    @staticmethod
-    def _passes_with_percent(spec: CheckSpec, value: Any,
-                             row_count: Optional[int]):
-        """(ok, compare_value): threshold evaluation honoring percent
-        thresholds EXACTLY like the batch lane's _evaluate — the
-        incremental/tail/partitioned lanes fold raw counts, and
-        comparing a raw count against a percent bound gives wrong
-        verdicts in both directions. Shared rule: checks/spec.py."""
-        from datacontract_cli_spark.checks.spec import passes_with_percent
-        return passes_with_percent(spec, value, row_count)
-
     def _evaluate(self, run: Run, spec: CheckSpec, value: Any,
                   row_count: Optional[int], metric_label: Optional[str] = None) -> None:
-        is_bad_row = spec.metric in (MetricType.MISSING_COUNT, MetricType.INVALID_COUNT)
-        is_percent = bool(spec.threshold_is_percent) and is_bad_row
-        percent = (round(value / row_count * 100, 6) if row_count else 0.0) if is_percent else None
-        compare_value = percent if is_percent else value
-
-        diag: Dict[str, Any] = {"metric": metric_label or spec.metric.value}
-        if spec.field is not None:
-            diag["field"] = spec.field
-        diag["value"] = value
-        if is_percent:
-            diag["unit"] = "percent"
-        if spec.severity is not None:
-            diag["severity"] = spec.severity
-        if spec.threshold is not None:
-            diag["threshold"] = spec.threshold.describe()
-        if row_count is not None and is_bad_row:
-            diag["row_count"] = row_count
-            diag["failed_fraction"] = round(value / row_count, 6) if row_count else 0.0
-        if percent is not None:
-            diag["percent"] = percent
-        if spec.metric is MetricType.INVALID_COUNT:
-            constraint = self._constraint_info(spec)
-            if constraint:
-                diag["constraint"] = constraint
-        elif spec.metric is MetricType.MISSING_COUNT and spec.missing_values:
-            diag["missing_values"] = spec.missing_values
-        run.set_diagnostics(spec.key, diag)
-
-        if spec.threshold is None:
-            run.set_result(spec.key, ResultEnum.passed, None)
-            return
-        ok = spec.threshold.passes(compare_value)
-        target = spec.field or spec.model
-        label = metric_label or spec.metric.value
-        if ok:
-            reason = None
-        elif is_percent:
-            reason = (f"Actual {label}({target}) was {percent}% ({value} of {row_count} rows), "
-                      f"expected {spec.threshold.describe()}%")
-        else:
-            reason = f"Actual {label}({target}) was {value}, expected {spec.threshold.describe()}"
-        run.set_result(spec.key, ResultEnum.passed if ok else _fail_result(spec), reason)
+        verdict = evaluate(spec, value, row_count, metric_label)
+        run.set_diagnostics(spec.key, verdict.diagnostics)
+        run.set_result(spec.key, verdict.result, verdict.reason)
 
     def _evaluate_timestamp_sla(self, run: Run, spec: CheckSpec, value: Any) -> None:
         now = dt.datetime.now(dt.timezone.utc)
@@ -1262,25 +1100,6 @@ class SparkContractEngine:
             run.set_result(spec.key, ResultEnum.failed,
                            f"Actual {spec.metric.value} of {spec.model}.{spec.field} was "
                            f"{round(age)}s, expected < {spec.seconds}s")
-
-    @staticmethod
-    def _constraint_info(spec: CheckSpec) -> Dict[str, Any]:
-        out: Dict[str, Any] = {}
-        if spec.valid_values is not None:
-            out["valid_values"] = spec.valid_values
-        if spec.valid_regex is not None:
-            out["pattern"] = spec.valid_regex
-        if spec.valid_min is not None:
-            out["minimum"] = spec.valid_min
-        if spec.valid_max is not None:
-            out["maximum"] = spec.valid_max
-        if spec.valid_min_length is not None:
-            out["min_length"] = spec.valid_min_length
-        if spec.valid_max_length is not None:
-            out["max_length"] = spec.valid_max_length
-        if spec.invalid_values is not None:
-            out["invalid_values"] = spec.invalid_values
-        return out
 
     # ------------------------------------------------------------------
     # failed samples

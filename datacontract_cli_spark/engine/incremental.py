@@ -11,8 +11,10 @@ across all manifest rows without rescanning anything.
 Complements :mod:`datacontract_cli_spark.engine.partitioned` (hash-bucket
 units, resume mid-run, key-scoped duplicate checks): buckets give stable
 logical units for conversation-scoped checks; files give physical units
-whose fingerprints detect appends and rewrites. Count-style metrics
-(row_count / missing / invalid) fold exactly over files; key-uniqueness
+whose fingerprints detect appends and rewrites. The per-file aggregate,
+the fold and the verdicts come from :mod:`.metric_plan` (the same plan
+and evaluator as ``test()``): count-style metrics (row_count / missing /
+invalid) fold exactly over files by its fold rule; key-uniqueness
 checks need the bucketed lane (duplicates cross file boundaries) — the
 two compose: incremental for the narrow counts, bucketed for uniqueness.
 
@@ -33,11 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
-from datacontract_cli_spark.engine.predicates import (
-    count_if,
-    invalid_condition,
-    missing_condition,
-    resolve_column,
+from datacontract_cli_spark.engine.metric_plan import (
+    ROW_COUNT_ALIAS,
+    aggregates,
+    fold_delta,
+    fold_sums,
+    plan_metrics,
 )
 
 _FILE = "__dc_file__"
@@ -49,7 +52,7 @@ _FILE = "__dc_file__"
 # v3: manifest rows record per-spec parameter fingerprints.
 LANE_VERSION = 3
 
-# CheckSpec fields that feed missing_condition/invalid_condition — editing
+# CheckSpec fields that feed the plan's row predicates — editing
 # any of these (new enum values, a different regex, moved bounds) changes
 # what the counts MEAN, so fingerprint-unchanged files must revalidate.
 _PARAM_FIELDS = ("metric", "field", "missing_values", "valid_values",
@@ -216,42 +219,26 @@ class IncrementalValidator:
             if schema is not None:
                 reader = reader.schema(schema)
             df = reader.parquet(*sorted(todo))
-            exprs = [F.count(F.lit(1)).alias("__n__")]
-            evaluators: List[Tuple[CheckSpec, str]] = []
-            for i, spec in enumerate(specs):
-                alias = f"m{i}"
-                if spec.metric is MetricType.ROW_COUNT:
-                    evaluators.append((spec, "__n__"))
-                    continue
-                col = resolve_column(df, spec.field) if spec.field else None
-                if spec.metric is MetricType.MISSING_COUNT and col:
-                    exprs.append(count_if(missing_condition(df, col, spec), alias))
-                    evaluators.append((spec, alias))
-                elif spec.metric is MetricType.INVALID_COUNT and col:
-                    cond = invalid_condition(df, col, spec)
-                    if cond is not None:
-                        exprs.append(count_if(cond, alias))
-                        evaluators.append((spec, alias))
-                # duplicate checks cross file boundaries: bucketed lane
-            evaluated_keys = {spec.key for spec, _ in evaluators}
-            skipped = sorted(spec_keys - evaluated_keys)
+            # the fold rule: only metrics whose file values sum run here
+            metrics = [m for m in plan_metrics(df, specs) if m.sums
+                       and m.resolved]
+            skipped = sorted(spec_keys - {m.spec.key for m in metrics})
             rows = (df.withColumn(_FILE, F.input_file_name())
-                      .groupBy(_FILE).agg(*exprs).collect())
+                      .groupBy(_FILE).agg(*aggregates(metrics)).collect())
             by_file = {_norm_uri(r[_FILE]): r for r in rows}
             now = datetime.now(timezone.utc).isoformat()
             for f in sorted(todo):
                 row = by_file.get(f)
                 size, mtime = current[f]
-                metrics: Dict[str, Any] = {}
-                n = int(row["__n__"]) if row is not None else 0
-                for spec, alias in evaluators:
-                    v = row[alias] if row is not None else 0
-                    metrics[spec.key] = int(v) if v is not None else 0
+                values: Dict[str, Any] = {}
+                n = int(row[ROW_COUNT_ALIAS]) if row is not None else 0
+                for m in metrics:
+                    values[m.spec.key] = int(m.value(row)) if row is not None else 0
                 new_verdicts.append(FileVerdict(
                     file=f, size=size, mtime=mtime, row_count=n,
-                    metrics=metrics, validated_at=now,
+                    metrics=values, validated_at=now,
                     unevaluated=skipped or None, lane=LANE_VERSION,
-                    params={k: spec_fps[k] for k in metrics}))
+                    params={k: spec_fps[k] for k in values}))
             os.makedirs(self.checkpoint_dir, exist_ok=True)
             with open(self._manifest_path(model), "a", encoding="utf-8") as fh:
                 for v in new_verdicts:
@@ -262,13 +249,10 @@ class IncrementalValidator:
 
         folded: Dict[str, Any] = {"row_count": sum(v.row_count
                                                    for v in live.values())}
+        folded.update(fold_sums(v.metrics for v in live.values()))
         unevaluated: set = set()
         for v in live.values():
             unevaluated.update(v.unevaluated or [])
-            for k, val in v.metrics.items():
-                if k == "row_count":
-                    continue
-                folded[k] = folded.get(k, 0) + val
         # a spec key no live file evaluated (e.g. empty todo on a stale
         # manifest) is unevaluated, never a passing zero
         unevaluated.update(k for k in spec_keys
@@ -393,69 +377,88 @@ class SnapshotTailer:
                 return json.load(f)
         return {"validated": [], "last_fold": {}}
 
-    def poll(self, table_path: str, specs: List[CheckSpec],
-             model: str) -> List[Dict[str, Any]]:
-        """Validate all pending snapshots; returns one result per newly
-        validated snapshot: {snapshot_id, folded (cumulative), delta
-        (this snapshot's appended counts), new_files}."""
-        from datacontract_cli_spark.sources.iceberg_table import snapshots
+    def _save_state(self, model: str, state: Dict[str, Any]) -> None:
+        # temp file + atomic rename: a tailer killed mid-write resumes
+        # from the last complete state, never from a torn file
+        os.makedirs(self.checkpoint_dir, exist_ok=True)
+        tmp = self._state_path(model) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(state, f)
+        os.replace(tmp, self._state_path(model))
 
+    @staticmethod
+    def _verdict(ident: Dict[str, Any], prev_fold: Dict[str, Any],
+                 r: Optional[Dict[str, Any]], error: Optional[str],
+                 lists: Tuple[str, ...], **extra) -> Dict[str, Any]:
+        """One tailer result: ``r``'s cumulative fold, its delta over
+        ``prev_fold`` and its ``lists``; on ``error`` the fold stands
+        still, the lists are empty and there is no data change."""
+        if error is not None:
+            return {**ident, "error": error, "folded": dict(prev_fold),
+                    "delta": {}, **{k: [] for k in lists}, **extra,
+                    "data_change": False}
+        return {**ident, "folded": dict(r["folded"]),
+                "delta": fold_delta(r["folded"], prev_fold),
+                **{k: r[k] for k in lists}, **extra}
+
+    def _drain(self, model: str, pending: List[Any], validate,
+               verdict) -> List[Dict[str, Any]]:
+        """Validate ``pending`` table versions in order, saving the state
+        after each one (crash-safe per version). A version whose read
+        fails for good (vacuumed or deleted files, a DV / column-mapping
+        refusal) gets one error verdict and is marked validated, so the
+        tailer keeps going instead of re-failing it every poll; any other
+        failure surfaces the verdicts so far and retries next poll."""
         state = self._load_state(model)
-        seen = set(state["validated"])
-        snaps = snapshots(table_path)
-        ops = {s["snapshot_id"]: s.get("operation") for s in snaps}
-        pending = [s["snapshot_id"] for s in snaps
-                   if s["snapshot_id"] not in seen]
-        out: List[Dict[str, Any]] = []
         prev_fold = dict(state["last_fold"])
-
-        def _save() -> None:
-            os.makedirs(self.checkpoint_dir, exist_ok=True)
-            tmp = self._state_path(model) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, self._state_path(model))
-
-        for sid in pending:  # snapshot log is already append-ordered
+        out: List[Dict[str, Any]] = []
+        for vid in pending:
             try:
-                r = self.iv.run_iceberg(table_path, specs, model,
-                                        snapshot_id=sid)
+                r = validate(vid)
             except Exception as e:  # noqa: BLE001 — verdicts must surface
-                # expire_snapshots drops expired snapshots from the
-                # metadata this poll reads, so unlike Delta the normal
-                # maintenance path never lands here — but manually
-                # deleted files / races still must not lose the batch's
-                # completed verdicts or wedge the tailer
                 msg = str(e)
+                out.append(verdict(vid, prev_fold, None, msg))
                 gone = (isinstance(e, (FileNotFoundError,
                                        NotImplementedError))
                         or "PATH_NOT_FOUND" in msg
                         or "does not exist" in msg)
-                out.append({"snapshot_id": sid, "error": msg,
-                            "folded": dict(prev_fold), "delta": {},
-                            "new_files": [], "unevaluated": [],
-                            "operation": ops.get(sid),
-                            "data_change": False})
-                if gone:
-                    state["validated"].append(sid)
-                    _save()
-                    continue
-                break
-            delta = {k: v - prev_fold.get(k, 0)
-                     for k, v in r["folded"].items()
-                     if isinstance(v, (int, float))}
-            out.append({"snapshot_id": sid, "folded": dict(r["folded"]),
-                        "delta": delta, "new_files": r["new_files"],
-                        "unevaluated": r["unevaluated"],
-                        "operation": ops.get(sid),
-                        # replace = compaction/rewrite: same rows, new
-                        # files — thresholds should not gate it
-                        "data_change": ops.get(sid) != "replace"})
+                if not gone:
+                    break
+                state["validated"].append(vid)
+                self._save_state(model, state)
+                continue
+            out.append(verdict(vid, prev_fold, r, None))
             prev_fold = dict(r["folded"])
-            state["validated"].append(sid)
+            state["validated"].append(vid)
             state["last_fold"] = prev_fold
-            _save()  # crash-safe per snapshot
+            self._save_state(model, state)
         return out
+
+    def poll(self, table_path: str, specs: List[CheckSpec],
+             model: str) -> List[Dict[str, Any]]:
+        """Validate all pending snapshots; returns one result per newly
+        validated snapshot: {snapshot_id, folded (cumulative), delta
+        (this snapshot's appended counts), new_files}. Expired snapshots
+        leave the metadata this poll reads, so only manually deleted
+        files or races reach the error path."""
+        from datacontract_cli_spark.sources.iceberg_table import snapshots
+
+        seen = set(self._load_state(model)["validated"])
+        snaps = snapshots(table_path)
+        ops = {s["snapshot_id"]: s.get("operation") for s in snaps}
+        pending = [s["snapshot_id"] for s in snaps
+                   if s["snapshot_id"] not in seen]
+        # snapshot log is already append-ordered; replace =
+        # compaction/rewrite: same rows, new files — thresholds should
+        # not gate it
+        return self._drain(
+            model, pending,
+            lambda sid: self.iv.run_iceberg(table_path, specs, model,
+                                            snapshot_id=sid),
+            lambda sid, prev, r, err: self._verdict(
+                {"snapshot_id": sid}, prev, r, err,
+                ("new_files", "unevaluated"), operation=ops.get(sid),
+                data_change=ops.get(sid) != "replace"))
 
     def poll_dir(self, path: str, specs: List[CheckSpec],
                  model: str) -> List[Dict[str, Any]]:
@@ -467,40 +470,29 @@ class SnapshotTailer:
         state = self._load_state(model)
         prev_fold = dict(state["last_fold"])
         poll_idx = len(state["validated"])
+        lists = ("new_files", "removed_files", "unevaluated")
         try:
             r = self.iv.run(path, specs, model)
         except Exception as e:  # noqa: BLE001 — same parity as poll()
             # a corrupt/half-written file in the landing zone must emit
             # an error verdict, not crash every subsequent --follow poll
-            return [{"poll": poll_idx, "error": str(e),
-                     "folded": dict(prev_fold), "delta": {},
-                     "new_files": [], "removed_files": [],
-                     "unevaluated": [], "data_change": False}]
-        numeric_fold = {k: v for k, v in r["folded"].items()
-                        if isinstance(v, (int, float))}
+            return [self._verdict({"poll": poll_idx}, prev_fold, None,
+                                  str(e), lists)]
+        numeric_fold = fold_sums([r["folded"]])
         if not r["new_files"] and not r["removed_files"]:
             # crash recovery: the file manifest advanced but the tailer
             # state did not (died between iv.run's manifest append and
-            # our _save) — the fold mismatch re-emits the lost batch's
-            # verdict as a catch-up delta instead of dropping it
+            # our state save) — the fold mismatch re-emits the lost
+            # batch's verdict as a catch-up delta instead of dropping it
             caught_up = all(prev_fold.get(k, 0) == v
                             for k, v in numeric_fold.items())
             if caught_up or not r["files"]:
                 return []
-        delta = {k: v - prev_fold.get(k, 0)
-                 for k, v in numeric_fold.items()}
-        out = {"poll": poll_idx, "folded": dict(r["folded"]),
-               "delta": delta, "new_files": r["new_files"],
-               "removed_files": r["removed_files"],
-               "unevaluated": r["unevaluated"],
-               "data_change": True}
+        out = self._verdict({"poll": poll_idx}, prev_fold, r, None, lists,
+                            data_change=True)
         state["validated"].append(poll_idx)
-        state["last_fold"] = dict(numeric_fold)
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = self._state_path(model) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._state_path(model))
+        state["last_fold"] = numeric_fold
+        self._save_state(model, state)
         return [out]
 
     def poll_delta(self, table_path: str, specs: List[CheckSpec],
@@ -516,55 +508,14 @@ class SnapshotTailer:
             delta_versions,
         )
 
-        state = self._load_state(model)
-        seen = set(state["validated"])
+        seen = set(self._load_state(model)["validated"])
         pending = [v for v in delta_versions(table_path) if v not in seen]
-        out: List[Dict[str, Any]] = []
-        prev_fold = dict(state["last_fold"])
-
-        def _save() -> None:
-            os.makedirs(self.checkpoint_dir, exist_ok=True)
-            tmp = self._state_path(model) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, self._state_path(model))
-
-        for ver in pending:  # version numbers are already append-ordered
-            try:
-                r = self.iv.run_delta(table_path, specs, model, version=ver)
-            except Exception as e:  # noqa: BLE001 — verdicts must surface
-                msg = str(e)
-                # permanent: vacuumed files never come back, and a DV /
-                # column-mapping refusal holds for that version forever
-                gone = (isinstance(e, (FileNotFoundError,
-                                       NotImplementedError))
-                        or "PATH_NOT_FOUND" in msg
-                        or "does not exist" in msg)
-                out.append({"delta_version": ver, "error": msg,
-                            "folded": dict(prev_fold), "delta": {},
-                            "new_files": [], "removed_files": [],
-                            "unevaluated": [], "data_change": False})
-                if gone:
-                    # vacuumed history: this version's files are gone
-                    # FOREVER — emit one error verdict, mark validated,
-                    # keep tailing (otherwise a fresh checkpoint dir on a
-                    # vacuumed table re-fails the same version every poll)
-                    state["validated"].append(ver)
-                    _save()
-                    continue
-                # transient failure: surface the verdicts already
-                # computed; this version retries on the next poll
-                break
-            delta = {k: v - prev_fold.get(k, 0)
-                     for k, v in r["folded"].items()
-                     if isinstance(v, (int, float))}
-            out.append({"delta_version": ver, "folded": dict(r["folded"]),
-                        "delta": delta, "new_files": r["new_files"],
-                        "removed_files": r["removed_files"],
-                        "unevaluated": r["unevaluated"],
-                        "data_change": commit_data_change(table_path, ver)})
-            prev_fold = dict(r["folded"])
-            state["validated"].append(ver)
-            state["last_fold"] = prev_fold
-            _save()
-        return out
+        return self._drain(
+            model, pending,
+            lambda ver: self.iv.run_delta(table_path, specs, model,
+                                          version=ver),
+            lambda ver, prev, r, err: self._verdict(
+                {"delta_version": ver}, prev, r, err,
+                ("new_files", "removed_files", "unevaluated"),
+                **({} if err else {"data_change":
+                                   commit_data_change(table_path, ver)})))

@@ -11,9 +11,10 @@ Every bucket gets a pass/fail verdict per check plus lineage (input path,
 row count, timestamp). Verdicts append to a JSON-lines manifest; a re-run
 loads the manifest and re-validates ONLY the buckets that are missing
 (crash-resume) — the scan is filtered to those buckets before any work
-happens. Global metrics fold over bucket metrics (counts sum; a duplicate
-count on keys containing the partition key is bucket-local, so the sum is
-exact).
+happens. Global metrics fold over bucket metrics by the fold rule of
+:mod:`.metric_plan` (counts sum; a duplicate count on keys containing the
+partition key is bucket-local, so the sum is exact); the bucket aggregate
+and every verdict come from the same plan and evaluator as ``test()``.
 
 Skew: a hot conv_id concentrates in one bucket, but bucket metrics are
 plain aggregations (no per-key state), so the only skew surface is the
@@ -34,19 +35,18 @@ from typing import Any, Dict, List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datacontract_cli_spark.checks.spec import (
-    CheckSpec,
-    MetricType,
-    passes_with_percent,
+from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
+from datacontract_cli_spark.engine.metric_plan import (
+    ROW_COUNT_ALIAS,
+    ROW_LEVEL,
+    aggregates,
+    count_columns,
+    evaluate,
+    fold_sums,
+    key_columns,
+    plan_metrics,
 )
-from datacontract_cli_spark.engine.executor import _ROW_COUNT_ALIAS, _fail_result
-from datacontract_cli_spark.engine.predicates import (
-    _q as _qc,
-    count_if,
-    invalid_condition,
-    missing_condition,
-    resolve_column,
-)
+from datacontract_cli_spark.engine.predicates import _q as _qc, resolve_column
 
 _BUCKET = "__dc_bucket__"
 
@@ -110,6 +110,34 @@ class PartitionedValidator:
                 f.write(v.to_json() + "\n")
 
     # -- execution -----------------------------------------------------------
+    def spec_errors(self, df: DataFrame, specs: List[CheckSpec],
+                    model: str) -> Dict[str, str]:
+        """Specs that cannot be folded per bucket, with the reason. A
+        per-bucket duplicate-group count only sums exactly when rows
+        sharing the duplicate key land in one bucket — i.e. the partition
+        key is part of the duplicate key. Anything else would silently
+        under-count (two equal emails in different conv_id buckets each
+        count zero), so it is an error, never a pass."""
+        errors: Dict[str, str] = {}
+        for spec in specs:
+            if spec.metric is not MetricType.DUPLICATE_COUNT:
+                continue
+            cols = key_columns(spec)
+            missing = [c for c in cols if resolve_column(df, c) is None]
+            if not cols:
+                errors[spec.key] = "duplicate check has no columns"
+            elif self.partition_key not in cols:
+                errors[spec.key] = (
+                    f"uniqueness on {cols} cannot be folded per-bucket "
+                    f"when the partition key {self.partition_key!r} is "
+                    "not part of the duplicate key — two equal keys in "
+                    "different buckets would each count zero; run it "
+                    "through test() (the batched lane is exact)")
+            elif missing:
+                errors[spec.key] = (
+                    f"column(s) {missing} not found in model {model}")
+        return errors
+
     def run(self, df: DataFrame, specs: List[CheckSpec], model: str,
             source_path: Optional[str] = None,
             distinct_cols: Optional[List[str]] = None) -> Dict[int, BucketVerdict]:
@@ -150,26 +178,9 @@ class PartitionedValidator:
             # resume: prune completed buckets before any metric work
             work = work.filter(F.col(_BUCKET).isin(remaining))
 
-        exprs = [F.count(F.lit(1)).alias(_ROW_COUNT_ALIAS)]
-        evaluators = []
-        for i, spec in enumerate(specs):
-            alias = f"m{i}"
-            if spec.metric is MetricType.ROW_COUNT:
-                evaluators.append((spec, _ROW_COUNT_ALIAS))
-                continue
-            col = resolve_column(df, spec.field) if spec.field else None
-            if spec.metric is MetricType.MISSING_COUNT and col:
-                exprs.append(count_if(missing_condition(df, col, spec), alias))
-                evaluators.append((spec, alias))
-            elif spec.metric is MetricType.INVALID_COUNT and col:
-                cond = invalid_condition(df, col, spec)
-                if cond is not None:
-                    exprs.append(count_if(cond, alias))
-                    evaluators.append((spec, alias))
-            elif spec.metric is MetricType.DUPLICATE_COUNT:
-                # bucket-local when the duplicate key includes/derives the
-                # partition key: computed as a dedicated grouped job below
-                continue
+        # the fold rule: only metrics whose bucket values sum run here
+        metrics = [m for m in plan_metrics(df, specs) if m.sums]
+        exprs = aggregates(metrics)
         for c in distinct_cols or []:
             rc = resolve_column(df, c)
             if rc is not None:
@@ -188,37 +199,19 @@ class PartitionedValidator:
             field_names = [f.name for f in gdf.schema.fields]
             rows = list(rows) + [
                 _Row(**{n: (b if n == _BUCKET
-                            else 0 if n == _ROW_COUNT_ALIAS else None)
+                            else 0 if n == ROW_COUNT_ALIAS else None)
                         for n in field_names})
                 for b in sorted(todo)
             ]
 
-        # bucket-local duplicate counts (one job per distinct key tuple).
-        # Only computable when the duplicate key CONTAINS the partition
-        # key (per-bucket group counts sum exactly then); everything else
-        # is an honest error, never a silent zero-pass
+        # bucket-local duplicate counts (one job per distinct key tuple)
         dup_specs = [s for s in specs if s.metric is MetricType.DUPLICATE_COUNT]
+        dup_errors = self.spec_errors(df, specs, model)
         dup_values: Dict[str, Dict[int, int]] = {}
-        dup_errors: Dict[str, str] = {}
         for spec in dup_specs:
-            cols = spec.columns or ([spec.field] if spec.field else [])
-            if not cols:
-                dup_errors[spec.key] = "duplicate check has no columns"
+            if spec.key in dup_errors:
                 continue
-            if self.partition_key not in cols:
-                dup_errors[spec.key] = (
-                    f"uniqueness on {cols} cannot be folded per-bucket "
-                    f"when the partition key {self.partition_key!r} is "
-                    "not part of the duplicate key — two equal keys in "
-                    "different buckets would each count zero; run it "
-                    "through the batch engine")
-                continue
-            resolved = [resolve_column(df, c) for c in cols]
-            if any(c is None for c in resolved):
-                missing = [c for c, r in zip(cols, resolved) if r is None]
-                dup_errors[spec.key] = (
-                    f"column(s) {missing} not found in model {model}")
-                continue
+            resolved = [resolve_column(df, c) for c in key_columns(spec)]
             grouped = (
                 work.groupBy(_BUCKET, *[F.col(_qc(c)) for c in resolved])
                 .count().filter(F.col("count") > 1)
@@ -231,37 +224,30 @@ class PartitionedValidator:
         for row in rows:
             d = row.asDict()
             bucket = d[_BUCKET]
-            row_count = int(d[_ROW_COUNT_ALIAS])
+            row_count = int(d[ROW_COUNT_ALIAS])
             results: Dict[str, str] = {}
-            metrics: Dict[str, Any] = {"row_count": row_count}
+            metrics_out: Dict[str, Any] = {"row_count": row_count}
             for c in distinct_cols or []:
                 sk = d.get(f"__hll_{c}__")
                 if sk is not None:
                     import base64
-                    metrics[f"hll_sketch::{c}"] = base64.b64encode(bytes(sk)).decode()
-            for spec, alias in evaluators:
-                value = d[alias] if alias in d else None
-                value = int(value) if value is not None else 0
-                metrics[spec.key] = value
-                if spec.threshold is not None:
-                    # percent thresholds evaluate against the BUCKET's
-                    # own rate, not the raw count
-                    ok, _ = passes_with_percent(spec, value, row_count)
-                    results[spec.key] = (
-                        "passed" if ok else _fail_result(spec).value
-                    )
+                    metrics_out[f"hll_sketch::{c}"] = base64.b64encode(bytes(sk)).decode()
+            for m in metrics:
+                if not m.resolved:
+                    continue
+                value = int(m.value(d) or 0)
+                metrics_out[m.spec.key] = value
+                # percent thresholds evaluate against the BUCKET's own rate
+                results[m.spec.key] = evaluate(m.spec, value, row_count).result.value
             for spec in dup_specs:
                 if spec.key in dup_errors:
                     results[spec.key] = "error"
                     continue
                 value = dup_values.get(spec.key, {}).get(bucket, 0)
-                metrics[spec.key] = value
-                if spec.threshold is not None:
-                    results[spec.key] = (
-                        "passed" if spec.threshold.passes(value) else _fail_result(spec).value
-                    )
+                metrics_out[spec.key] = value
+                results[spec.key] = evaluate(spec, value).result.value
             new_verdicts.append(BucketVerdict(
-                bucket, row_count, results, metrics,
+                bucket, row_count, results, metrics_out,
                 {"source": source_path, "validated_at": now,
                  "partition_key": self.partition_key, "n_buckets": self.n_buckets},
             ))
@@ -284,29 +270,20 @@ class PartitionedValidator:
         buckets ('missing_count <= 10' with 1 per bucket × 64) and
         false-fails lower bounds ('row_count >= 1000' in 64 slices).
         Error verdicts always carry through either way."""
-        totals: Dict[str, Any] = {}
+        totals = fold_sums(v.metrics for v in verdicts.values())
         results: Dict[str, str] = {}
         severity = {"failed": 0, "error": 1, "warning": 2, "passed": 3}
         for v in verdicts.values():
-            for k, val in v.metrics.items():
-                if k.startswith("hll_sketch::"):
-                    continue  # binary sketches union via fold_distinct()
-                totals[k] = totals.get(k, 0) + (val or 0)
             for k, res in v.results.items():
                 cur = results.get(k)
                 if cur is None or severity.get(res, 3) < severity.get(cur, 3):
                     results[k] = res
         if specs is not None:
-            row_count = totals.get("row_count")
             for spec in specs:
-                if results.get(spec.key) == "error":
+                if results.get(spec.key) == "error" or spec.key not in totals:
                     continue  # never upgrade an error
-                if spec.threshold is None or spec.key not in totals:
-                    continue
-                ok, _ = passes_with_percent(spec, totals[spec.key],
-                                            row_count)
-                results[spec.key] = ("passed" if ok
-                                     else _fail_result(spec).value)
+                results[spec.key] = evaluate(
+                    spec, totals[spec.key], totals.get("row_count")).result.value
         return {"metrics": totals, "results": results,
                 "n_buckets_validated": len(verdicts)}
 
@@ -339,27 +316,10 @@ def per_file_verdicts(df: DataFrame, specs: List[CheckSpec]) -> DataFrame:
     files carry violations without a second scan (at warehouse scale this is
     the 'quarantine the bad file' primitive). One grouped aggregation,
     map-side combinable; output one row per file with per-check violation
-    counts."""
-    exprs = [F.count(F.lit(1)).alias("row_count")]
-    for spec in specs:
-        if spec.metric not in (MetricType.MISSING_COUNT,
-                               MetricType.INVALID_COUNT):
-            continue
-        col = resolve_column(df, spec.field) if spec.field else None
-        if col is None:
-            # a NULL column, not a silently absent one: a consumer
-            # quarantining files by violation counts must SEE that the
-            # check never evaluated (schema drift dropped the column)
-            exprs.append(F.max(F.lit(None).cast("long")).alias(spec.key))
-            continue
-        if spec.metric is MetricType.MISSING_COUNT:
-            exprs.append(count_if(missing_condition(df, col, spec), spec.key))
-        else:
-            cond = invalid_condition(df, col, spec)
-            if cond is not None:
-                exprs.append(count_if(cond, spec.key))
+    counts (a NULL column for a check whose column the files lack)."""
+    metrics = plan_metrics(df, specs, alias="{key}", metrics=ROW_LEVEL)
     return (
         df.groupBy(F.col("_metadata.file_path").alias("file"))
-        .agg(*exprs)
+        .agg(F.count(F.lit(1)).alias("row_count"), *count_columns(metrics))
         .orderBy("file")
     )

@@ -4,10 +4,10 @@ in one shuffle.
 A whole-table pass/fail hides which slice of the data broke — at web
 scale, a contract usually fails because one source, one day, or one
 language went bad while the rest stayed green. ``sliced_validation``
-groups by the slice columns and evaluates the same compiled check
-expressions the engine's batched aggregate runs (missing/invalid
-count-ifs, row counts, quantile sketches), then folds each spec's
-threshold into a Column-level verdict — the per-slice analogue of the
+groups by the slice columns and evaluates the aggregates of the metric
+plan (:mod:`.metric_plan` — the missing/invalid count-ifs, row counts and
+quantile sketches ``test()`` runs), then folds each spec's threshold into
+a Column-level verdict — the per-slice analogue of the
 north rule's per-partition pass/fail verdicts, with semantic segments
 instead of physical buckets.
 
@@ -15,8 +15,8 @@ Scale shape: ONE groupBy(slice) over one scan, map-side combine, rows =
 slices × 1; the verdict math is a per-row projection on the tiny grouped
 frame; the long (slice, check, value, passed) form explodes a literal
 array of structs — no second pass, no driver loop, works on a thousand
-slices as on three. Threshold evaluation matches
-``checks.spec.Threshold.passes`` for numeric thresholds (``passes(None)``
+slices as on three. ``_threshold_condition`` is the Column twin of the
+plan's evaluator for numeric thresholds (percent rates, ``passes(None)``
 = False). Drift checks ride the same shuffle: freqDriftPsi baselines
 expand to per-category count-ifs (novel mass folded into one bucket —
 see ``_psi_value``) and quantileDriftKs ``cdf`` baselines to per-point
@@ -28,20 +28,21 @@ engine for those.
 
 from __future__ import annotations
 
+import operator
 from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
-from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op, Threshold
-from datacontract_cli_spark.engine.predicates import (
-    _q,
-    count_if,
-    invalid_condition,
-    missing_condition,
-    resolve_column,
+from datacontract_cli_spark.checks.spec import CheckSpec, MetricType, Op
+from datacontract_cli_spark.engine.metric_plan import (
+    ROW_COUNT_ALIAS,
+    ROW_LEVEL,
+    aggregates,
+    plan_metrics,
 )
+from datacontract_cli_spark.engine.predicates import _q, resolve_column
 from datacontract_cli_spark.model.contract import DataContract
 
 _SLICEABLE = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
@@ -49,6 +50,9 @@ _SLICEABLE = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
               MetricType.FREQ_DRIFT_PSI, MetricType.QUANTILE_DRIFT_KS)
 
 _DRIFT_EPS = 1e-6  # matches operators.drift._EPS
+
+_COMPARE = {Op.EQ: operator.eq, Op.NE: operator.ne, Op.GT: operator.gt,
+            Op.GE: operator.ge, Op.LT: operator.lt, Op.LE: operator.le}
 
 
 def _psi_value(prefix: str, baseline: dict, n: Column) -> Column:
@@ -85,40 +89,31 @@ def _ks_value(prefix: str, points: list, n: Column) -> Column:
     return terms[0] if len(terms) == 1 else F.greatest(*terms)
 
 
-def _threshold_condition(t: Threshold, value: Column) -> Optional[Column]:
-    """``Threshold.passes`` as a Column over a DOUBLE value column; None
-    when the threshold isn't numeric-expressible. NULL values (e.g. a
-    quantile of an all-null slice) evaluate to passed=false, matching
-    passes(None) = False."""
+def _threshold_condition(spec: CheckSpec, value: Column,
+                         n: Column) -> Optional[Column]:
+    """The metric plan's evaluator as a Column over a DOUBLE value column
+    and the slice's row count ``n``; None when the threshold isn't
+    numeric-expressible. Percent thresholds gate the slice's RATE
+    (value/rows*100, 6 dp). NULL values (e.g. a quantile of an all-null
+    slice) evaluate to passed=false, matching passes(None) = False."""
     def _num(v):
         try:
             return float(v)
         except (TypeError, ValueError):
             return None
 
+    t = spec.threshold
+    if spec.threshold_is_percent and spec.metric in ROW_LEVEL:
+        value = F.when(n > 0, F.round(value / n * 100, 6)).otherwise(0.0)
     v = _num(t.value)
     v2 = _num(t.value2)
     if v is None:
         return None
-    if t.op is Op.EQ:
-        cond = value == F.lit(v)
-    elif t.op is Op.NE:
-        cond = value != F.lit(v)
-    elif t.op is Op.GT:
-        cond = value > F.lit(v)
-    elif t.op is Op.GE:
-        cond = value >= F.lit(v)
-    elif t.op is Op.LT:
-        cond = value < F.lit(v)
-    elif t.op is Op.LE:
-        cond = value <= F.lit(v)
-    elif t.op is Op.BETWEEN:
-        if v2 is None:
-            return None
+    if t.op in _COMPARE:
+        cond = _COMPARE[t.op](value, F.lit(v))
+    elif t.op is Op.BETWEEN and v2 is not None:
         cond = (value >= F.lit(v)) & (value <= F.lit(v2))
-    elif t.op is Op.NOT_BETWEEN:
-        if v2 is None:
-            return None
+    elif t.op is Op.NOT_BETWEEN and v2 is not None:
         cond = (value < F.lit(v)) | (value > F.lit(v2))
     else:
         return None
@@ -136,8 +131,10 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
         if s.model == model and s.metric in _SLICEABLE
         and s.threshold is not None
     ]
-    exprs = [F.count(F.lit(1)).alias("__n__")]
-    verdicts = []  # (key, value_col_alias)
+    planned = {m.alias: m for m in plan_metrics(df, specs, alias="__m{i}__")}
+    n = F.col(ROW_COUNT_ALIAS)
+    exprs = aggregates([])
+    verdicts = []  # (spec, value Column or None)
     for i, spec in enumerate(specs):
         alias = f"__m{i}__"
         column = resolve_column(df, spec.field) if spec.field else None
@@ -146,9 +143,6 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
             # in every slice (null metric), never silently drop it — the
             # batch engine fails the same check with "Column not found"
             verdicts.append((spec, None))
-            continue
-        if spec.metric is MetricType.ROW_COUNT:
-            verdicts.append((spec, "__n__"))
             continue
         if spec.metric is MetricType.FREQ_DRIFT_PSI:
             baseline = spec.baseline or {}
@@ -160,10 +154,9 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
                 qcol = F.col(_q(column))
                 cond = (qcol.isNull() if k is None
                         else qcol.eqNullSafe(F.lit(k)))
-                exprs.append(count_if(cond, f"{alias}k{j}"))
-            verdicts.append(
-                (spec, F.round(_psi_value(alias, baseline, F.col("__n__")),
-                               6)))
+                exprs.append(F.sum(F.when(cond, 1).otherwise(0))
+                             .alias(f"{alias}k{j}"))
+            verdicts.append((spec, F.round(_psi_value(alias, baseline, n), 6)))
             continue
         if spec.metric is MetricType.QUANTILE_DRIFT_KS:
             points = (spec.baseline or {}).get("cdf")
@@ -178,47 +171,30 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
                 (spec, F.round(_ks_value(alias, points, F.col(f"{alias}n")),
                                6)))
             continue
-        if spec.metric is MetricType.MISSING_COUNT:
-            expr = count_if(missing_condition(df, column, spec), alias)
-        elif spec.metric is MetricType.INVALID_COUNT:
-            cond = invalid_condition(df, column, spec)
-            expr = (count_if(cond, alias) if cond is not None
-                    else F.lit(0).cast("bigint").alias(alias))
-        else:  # QUANTILE
-            q = float(spec.quantile if spec.quantile is not None else 0.5)
-            expr = (F.percentile(F.col(_q(column)), F.lit(q))
-                    if spec.quantile_exact
-                    else F.percentile_approx(F.col(_q(column)), q, 10000)
-                    ).alias(alias)
-        exprs.append(expr)
-        verdicts.append((spec, alias))
+        m = planned[alias]
+        if m.agg is not None:
+            exprs.append(m.agg)
+            verdicts.append((spec, F.col(alias)))
+        else:  # the slice's row count, or an invalid check without constraints
+            verdicts.append((spec, n
+                             if spec.metric is MetricType.ROW_COUNT
+                             else F.lit(0)))
 
     grouped = df.groupBy(*[F.col(c) for c in slice_cols]).agg(*exprs)
     if min_slice_rows > 0:
-        grouped = grouped.filter(F.col("__n__") >= min_slice_rows)
+        grouped = grouped.filter(n >= min_slice_rows)
 
     rows = []
-    for spec, alias in verdicts:
-        if alias is None:  # missing column: failed verdict, null metric
+    for spec, value in verdicts:
+        if value is None:  # missing column: failed verdict, null metric
             rows.append(F.struct(
                 F.lit(spec.key).alias("check_key"),
                 F.lit(None).cast("double").alias("metric_value"),
                 F.lit(False).alias("passed"),
             ))
             continue
-        value = (alias if isinstance(alias, Column)
-                 else F.col(alias)).cast("double")
-        compare = value
-        if (spec.threshold_is_percent
-                and spec.metric in (MetricType.MISSING_COUNT,
-                                    MetricType.INVALID_COUNT)):
-            # percent thresholds gate the slice's RATE (value/rows*100),
-            # exactly like the batch lane's _evaluate; the raw count
-            # stays in metric_value
-            compare = F.when(
-                F.col("__n__") > 0,
-                F.round(value / F.col("__n__") * 100, 6)).otherwise(0.0)
-        cond = _threshold_condition(spec.threshold, compare)
+        value = value.cast("double")
+        cond = _threshold_condition(spec, value, n)
         if cond is None:
             continue
         rows.append(F.struct(

@@ -17,30 +17,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
-from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
-from datacontract_cli_spark.engine.predicates import (
-    invalid_condition,
-    missing_condition,
-    resolve_column,
-)
+from datacontract_cli_spark.checks.spec import CheckSpec
+from datacontract_cli_spark.engine.metric_plan import ROW_LEVEL, plan_metrics
 from datacontract_cli_spark.model.contract import DataContract
 
 
 def violation_conditions(df: DataFrame, specs: List[CheckSpec]) -> Dict[str, "F.Column"]:
     """check key → row-level violation predicate (row-level checks only:
-    missing/invalid; aggregate-level checks have no per-row meaning)."""
-    out = {}
-    for spec in specs:
-        col = resolve_column(df, spec.field) if spec.field else None
-        if col is None:
-            continue
-        if spec.metric is MetricType.MISSING_COUNT:
-            out[spec.key] = missing_condition(df, col, spec)
-        elif spec.metric is MetricType.INVALID_COUNT:
-            cond = invalid_condition(df, col, spec)
-            if cond is not None:
-                out[spec.key] = cond
-    return out
+    missing/invalid; aggregate-level checks have no per-row meaning) — the
+    metric plan's predicates, the same ones ``test()`` counts."""
+    return {m.spec.key: m.predicate
+            for m in plan_metrics(df, specs, metrics=ROW_LEVEL)
+            if m.predicate is not None}
 
 
 def violations(df: DataFrame, contract: DataContract, model: str) -> DataFrame:

@@ -21,7 +21,11 @@ Scale design (100 TB): the predicate lane is pure Column math inside the
 single table scan (whole-stage codegen, zero shuffle). The uniqueness
 lane is one hash-partitioned window per key set — the same shuffle a
 groupBy-keys would pay — ordered by (file, pos) so the KEPT row is the
-deterministic first occurrence in layout order. Quarantined volume is
+deterministic first occurrence in layout order. Both lanes take their
+rules from the metric plan (``engine/metric_plan.py``): the row predicates
+``test()`` counts and its NULL-key rule (a repeated NULL key is a
+duplicate), so a quarantined table passes its own contract's row-level
+and uniqueness checks. Quarantined volume is
 assumed a small fraction of the table: the delete file is tiny and the
 quarantine parquet is violations-sized, never table-sized.
 """
@@ -31,16 +35,18 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dc_field
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datacontract_cli_spark.checks.compile import compile_checks
 from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
-from datacontract_cli_spark.engine.predicates import (
-    invalid_condition,
-    missing_condition,
-    resolve_column,
+from datacontract_cli_spark.engine.metric_plan import (
+    ROW_LEVEL,
+    duplicate_occurrence,
+    key_columns,
 )
+from datacontract_cli_spark.engine.predicates import resolve_column
+from datacontract_cli_spark.engine.violations import violation_conditions
 from datacontract_cli_spark.model.contract import DataContract
 
 _FILE, _POS = "__icb_file", "__icb_pos"
@@ -58,45 +64,26 @@ class QuarantineReport:
 
 
 def _row_level_specs(contract: DataContract, model: str) -> List[CheckSpec]:
-    out = []
-    for s in compile_checks(contract):
-        if s.model != model:
-            continue
-        if s.metric in (MetricType.MISSING_COUNT, MetricType.INVALID_COUNT) \
-                and s.field:
-            out.append(s)
-        elif s.metric is MetricType.DUPLICATE_COUNT and (s.columns or s.field):
-            out.append(s)
-    return out
+    return [s for s in compile_checks(contract) if s.model == model and (
+        (s.metric in ROW_LEVEL and s.field)
+        or (s.metric is MetricType.DUPLICATE_COUNT and key_columns(s)))]
 
 
 def violation_reasons(df: DataFrame, specs: List[CheckSpec]) -> DataFrame:
     """Append ``__dc_reasons`` — the array of check keys each row violates
-    (empty array = clean row). Predicate checks are Column expressions in
-    the scan; each uniqueness check flags every occurrence AFTER the first
-    in (file, pos) order via one window."""
+    (empty array = clean row). Predicate checks are the metric plan's row
+    predicates in the scan; each uniqueness check flags every occurrence
+    AFTER the first in (file, pos) order via one window, NULL keys
+    included (a repeated NULL is a duplicate, as in ``test()``)."""
+    conds = violation_conditions(df, specs)
     flags = []
     for s in specs:
         if s.metric is MetricType.DUPLICATE_COUNT:
-            keys = [resolve_column(df, c) or c
-                    for c in (s.columns or [s.field])]
-            w = Window.partitionBy(*keys).orderBy(_FILE, _POS)
-            nn = None
-            for k in keys:
-                c = F.col(k).isNotNull()
-                nn = c if nn is None else (nn & c)
-            dup = (F.row_number().over(w) > 1) & nn
-            flags.append(F.when(dup, F.lit(s.key)))
-            continue
-        col = resolve_column(df, s.field)
-        if col is None:
-            continue
-        if s.metric is MetricType.MISSING_COUNT:
-            cond = missing_condition(df, col, s)
-        else:
-            cond = invalid_condition(df, col, s)
-        if cond is not None:
-            flags.append(F.when(cond, F.lit(s.key)))
+            keys = [resolve_column(df, c) or c for c in key_columns(s)]
+            flags.append(F.when(duplicate_occurrence(keys, [_FILE, _POS]),
+                                F.lit(s.key)))
+        elif s.key in conds:
+            flags.append(F.when(conds[s.key], F.lit(s.key)))
     if not flags:
         return df.withColumn("__dc_reasons",
                              F.array().cast("array<string>"))

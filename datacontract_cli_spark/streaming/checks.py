@@ -7,8 +7,10 @@ so violation counts and freshness are monitored continuously instead of at
 test time.
 
 - ``streaming_check_counts``: per tumbling window, row count + one violation
-  count per agg-able CheckSpec (missing/invalid). Late data handled by the
-  watermark; output mode "update"/"append" both work.
+  count per agg-able CheckSpec (missing/invalid) — the row predicates of
+  the metric plan (``engine/metric_plan.py``), so a window counts exactly
+  what ``test()`` counts. Late data handled by the watermark; output mode
+  "update"/"append" both work.
 - ``streaming_freshness``: max event-time per window → age at processing.
 - ``run_batch_smoke``: drives a bounded file stream to completion through a
   memory sink (how the tests exercise the streaming plan end-to-end).
@@ -23,11 +25,11 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datacontract_cli_spark.checks.spec import CheckSpec, MetricType
-from datacontract_cli_spark.engine.predicates import (
-    count_if,
-    invalid_condition,
-    missing_condition,
+from datacontract_cli_spark.checks.spec import CheckSpec
+from datacontract_cli_spark.engine.metric_plan import (
+    ROW_LEVEL,
+    count_columns,
+    plan_metrics,
 )
 
 
@@ -42,18 +44,11 @@ def streaming_check_counts(
 
     One streaming aggregation carries ALL checks (the streaming analogue of
     the batch engine's single ``df.agg``); state is one row per window."""
-    exprs = [F.count(F.lit(1)).alias("row_count")]
-    for spec in specs:
-        if spec.metric is MetricType.MISSING_COUNT and spec.field:
-            exprs.append(count_if(missing_condition(stream, spec.field, spec), spec.key))
-        elif spec.metric is MetricType.INVALID_COUNT and spec.field:
-            cond = invalid_condition(stream, spec.field, spec)
-            if cond is not None:
-                exprs.append(count_if(cond, spec.key))
+    metrics = plan_metrics(stream, specs, alias="{key}", metrics=ROW_LEVEL)
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("w"))
-        .agg(*exprs)
+        .agg(F.count(F.lit(1)).alias("row_count"), *count_columns(metrics))
         .select(F.col("w.start").alias("window_start"),
                 F.col("w.end").alias("window_end"), "*")
         .drop("w")

@@ -224,3 +224,49 @@ def test_group_quarantine_removes_whole_conversations(spark, tmp_path):
                               "conv_id string, turn_idx int, role string, "
                               "text string"), root)
     assert read_iceberg(spark, root).filter("conv_id = 'conv-2'").count() == 1
+
+
+NULL_KEY_CONTRACT = """
+apiVersion: v3.0.2
+kind: DataContract
+id: users
+version: 1.0.0
+name: users
+schema:
+  - name: users
+    logicalType: table
+    properties:
+      - name: id
+        logicalType: integer
+      - name: email
+        logicalType: string
+        unique: true
+"""
+
+
+def test_quarantine_flags_null_key_duplicates(spark, tmp_path):
+    """A repeated NULL key is a duplicate group (GROUP BY semantics, as in
+    test()): quarantining must flag it, so the cleaned table passes every
+    uniqueness check of its own contract."""
+    from datacontract_cli_spark.engine.executor import SparkContractEngine
+    from datacontract_cli_spark.model.run import ResultEnum
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, None), (4, "b")], "id int, email string")
+    root = str(tmp_path / "users")
+    write_iceberg_table(df.orderBy("id"), root)
+    contract = load_contract_str(NULL_KEY_CONTRACT)
+    engine = SparkContractEngine(spark)
+    before = engine.test(contract, tables={"users": read_iceberg(spark, root)})
+    assert before.check("users__email__field_unique").result \
+        is ResultEnum.failed
+    assert before.check("users__email__field_unique") \
+        .diagnostics["value"] == 1
+
+    rep = quarantine_violations(spark, root, contract, "users")
+    assert rep.counts_by_check == {"users__email__field_unique": 1}
+
+    after = engine.test(contract, tables={"users": read_iceberg(spark, root)})
+    unique = [c for c in after.checks if "unique" in c.type]
+    assert unique and all(c.result is ResultEnum.passed for c in unique)
+    assert read_iceberg(spark, root).count() == 3
