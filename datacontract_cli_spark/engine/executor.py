@@ -3,13 +3,14 @@
 Execution model (Spark-first, scale-aware):
 
 - **One batched aggregation per model.** Every ROW_COUNT / MISSING_COUNT /
-  INVALID_COUNT / FRESHNESS / RETENTION metric of a model compiles into a
-  named aggregate expression (the metric plan, ``engine/metric_plan.py``,
-  shared with every other validation lane; so is its evaluator) and they
-  all run as a single ``df.agg(*exprs)``
-  job (the reference batches the count metrics the same way:
+  INVALID_COUNT / FRESHNESS / RETENTION / quantileDriftKs metric of a
+  model compiles into a named aggregate expression (the metric plan,
+  ``engine/metric_plan.py``, shared with every other validation lane; so
+  is its evaluator) and they all run as a single ``df.agg(*exprs)`` job
+  (the reference batches the count metrics the same way:
   datacontract/engines/ibis/ibis_check_execute.py:254-327; we additionally
-  fold freshness/retention MAX/MIN into the same pass). Catalyst executes it
+  fold freshness/retention MAX/MIN and the KS count-ifs at each drift
+  baseline's points into the same pass). Catalyst executes it
   as one partial+final hash aggregate: the raw data is scanned once, only
   one scalar row crosses to the driver, and column pruning means the scan
   reads only referenced columns.
@@ -517,8 +518,8 @@ class SparkContractEngine:
         dup_specs = [s for s in scan_specs if s.metric is MetricType.DUPLICATE_COUNT]
         sql_specs = [s for s in scan_specs if s.metric is MetricType.CUSTOM_SQL]
         ri_specs = [s for s in scan_specs if s.metric is MetricType.REFERENTIAL_INTEGRITY]
-        drift_specs = [s for s in scan_specs if s.metric in
-                       (MetricType.FREQ_DRIFT_PSI, MetricType.QUANTILE_DRIFT_KS)]
+        drift_specs = [s for s in scan_specs
+                       if s.metric is MetricType.FREQ_DRIFT_PSI]
         run_specs = [s for s in scan_specs
                      if s.metric is MetricType.MAX_RUN_LENGTH]
         other = [s for s in scan_specs
@@ -561,13 +562,16 @@ class SparkContractEngine:
     def _plan_batch(self, run: Run, model: str, specs: List[CheckSpec],
                     df: DataFrame) -> List[Metric]:
         """The model's metric plan; a spec whose column is absent fails
-        here and leaves the batch."""
+        here, one the plan could not build (a malformed KS baseline)
+        errors here, and both leave the batch."""
         metrics = plan_metrics(df, specs)
         for m in metrics:
             if not m.resolved:
                 run.set_result(m.spec.key, fail_result(m.spec),
                                f"Column '{m.spec.field}' not found in model {model}")
-        return [m for m in metrics if m.resolved]
+            elif m.error is not None:
+                run.set_result(m.spec.key, ResultEnum.error, m.error)
+        return [m for m in metrics if m.resolved and m.error is None]
 
     def _run_agg_with_duplicates(self, run: Run, model: str,
                                  agg_specs: List[CheckSpec],
@@ -733,6 +737,13 @@ class SparkContractEngine:
                 self._evaluate(run, spec,
                                float(value) if value is not None else None,
                                None, metric_label="quantile")
+                continue
+            if spec.metric is MetricType.QUANTILE_DRIFT_KS:
+                # no non-null value is unknown drift: None, which no
+                # threshold passes
+                self._evaluate(run, spec,
+                               None if math.isnan(value) else round(value, 6),
+                               None, metric_label="ks_statistic")
                 continue
             value = int(value) if value is not None else None
             self._evaluate(run, spec, value, row_count)
@@ -944,16 +955,11 @@ class SparkContractEngine:
             return
         from datacontract_cli_spark.operators import drift
         try:
-            if spec.metric is MetricType.FREQ_DRIFT_PSI:
-                value = drift.psi(df, column, spec.baseline)
-                label = "psi"
-            else:
-                value = drift.ks_statistic(df, column, spec.baseline)
-                label = "ks_statistic"
+            value = drift.psi(df, column, spec.baseline)
         except Exception as e:
             run.set_result(spec.key, ResultEnum.error, f"Drift check failed: {e}")
             return
-        self._evaluate(run, spec, round(float(value), 6), None, metric_label=label)
+        self._evaluate(run, spec, round(float(value), 6), None, metric_label="psi")
 
     def _check_max_run(self, run: Run, spec: CheckSpec, df: DataFrame) -> None:
         """maxRunLength: longest run of consecutive identical action values

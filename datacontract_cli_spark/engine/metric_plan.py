@@ -7,9 +7,13 @@ row sinks in :mod:`.violations` and ``operators/quarantine``, windows in
 ``streaming/checks``) is a thin layer over three things declared here:
 
 - :func:`plan_metrics` — per aggregable spec (row count, missing,
-  invalid, freshness, retention, quantile): its resolved column, its row
-  predicate (missing/invalid), its aggregate Column under a stable alias,
-  and whether its per-unit values fold by sum (:attr:`Metric.sums`).
+  invalid, freshness, retention, quantile, KS drift): its resolved column,
+  its row predicate (missing/invalid), its aggregate Column under a stable
+  alias, and whether its per-unit values fold by sum
+  (:attr:`Metric.sums`). A KS drift check is a struct of exact count-ifs
+  at its baseline's points (``operators/drift.py`` ``ks_aggregate``), so
+  it costs no job of its own; a malformed baseline leaves the metric
+  unplanned with :attr:`Metric.error` set.
 - :func:`fold_sums` — the fold rule across units (buckets, files,
   snapshots): count metrics sum; nothing else folds by addition.
 - :func:`evaluate` — the percent rule, the threshold and the
@@ -24,7 +28,7 @@ value like any other, so a repeated NULL key is a duplicate group
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Dict, Iterable, List, Optional, Sequence
+from typing import Any, Dict, Iterable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -38,6 +42,11 @@ from datacontract_cli_spark.engine.predicates import (
     resolve_column,
 )
 from datacontract_cli_spark.model.run import ResultEnum
+from datacontract_cli_spark.operators.drift import (
+    ks_aggregate,
+    ks_from_counts,
+    ks_points,
+)
 
 AGGREGABLE = (
     MetricType.ROW_COUNT,
@@ -46,6 +55,7 @@ AGGREGABLE = (
     MetricType.FRESHNESS,
     MetricType.RETENTION,
     MetricType.QUANTILE,
+    MetricType.QUANTILE_DRIFT_KS,
 )
 ROW_LEVEL = (MetricType.MISSING_COUNT, MetricType.INVALID_COUNT)
 # the fold rule: per-unit values of these metrics sum to the global value;
@@ -66,6 +76,8 @@ class Metric:
     column: Optional[str] = None      # resolved column name
     predicate: Optional[Column] = None  # missing/invalid row predicate
     agg: Optional[Column] = None      # None: the shared row count, or 0
+    points: Optional[List[Tuple[float, float]]] = None  # KS (x, p) points
+    error: Optional[str] = None       # why a resolved spec is unplanned
 
     @property
     def resolved(self) -> bool:
@@ -77,12 +89,16 @@ class Metric:
 
     def value(self, row: Dict[str, Any]) -> Any:
         """This metric's value in one collected aggregate row: None when its
-        column did not resolve, 0 for an invalid check without
-        constraints (nothing can be invalid)."""
+        column did not resolve or it is unplanned, 0 for an invalid check
+        without constraints (nothing can be invalid), the KS statistic
+        (NaN for no non-null value) for a KS drift check."""
         if self.spec.metric is MetricType.ROW_COUNT:
             return row[ROW_COUNT_ALIAS]
-        if not self.resolved:
+        if not self.resolved or self.error is not None:
             return None
+        if self.points is not None:
+            counts = row[self.alias]
+            return ks_from_counts(counts["n"], counts["le"], self.points)
         return row[self.alias] if self.agg is not None else 0
 
 
@@ -118,6 +134,13 @@ def plan_metrics(df: DataFrame, specs: Sequence[CheckSpec],
             # interpolated percentile (buffers the column per group)
             m.agg = (F.percentile(col, F.lit(q)) if spec.quantile_exact
                      else F.percentile_approx(col, q, 10000)).alias(name)
+        elif spec.metric is MetricType.QUANTILE_DRIFT_KS:
+            try:
+                m.points = ks_points(spec.baseline)
+            except ValueError as e:
+                m.error = f"Drift check failed: {e}"
+                continue
+            m.agg = ks_aggregate(col, m.points).alias(name)
         if m.predicate is not None:
             m.agg = count_if(m.predicate, name)
     return out

@@ -5,10 +5,10 @@ A whole-table pass/fail hides which slice of the data broke — at web
 scale, a contract usually fails because one source, one day, or one
 language went bad while the rest stayed green. ``sliced_validation``
 groups by the slice columns and evaluates the aggregates of the metric
-plan (:mod:`.metric_plan` — the missing/invalid count-ifs, row counts and
-quantile sketches ``test()`` runs), then folds each spec's threshold into
-a Column-level verdict — the per-slice analogue of the
-north rule's per-partition pass/fail verdicts, with semantic segments
+plan (:mod:`.metric_plan` — the missing/invalid count-ifs, row counts,
+quantile sketches and KS count-ifs ``test()`` runs), then folds each
+spec's threshold into a Column-level verdict — the per-slice analogue of
+the north rule's per-partition pass/fail verdicts, with semantic segments
 instead of physical buckets.
 
 Scale shape: ONE groupBy(slice) over one scan, map-side combine, rows =
@@ -19,11 +19,13 @@ slices as on three. ``_threshold_condition`` is the Column twin of the
 plan's evaluator for numeric thresholds (percent rates, ``passes(None)``
 = False). Drift checks ride the same shuffle: freqDriftPsi baselines
 expand to per-category count-ifs (novel mass folded into one bucket —
-see ``_psi_value``) and quantileDriftKs ``cdf`` baselines to per-point
-count-ifs, so per-slice drift verdicts cost zero extra passes. Checks
-whose thresholds aren't expressible as Column math (timestamp SLAs,
-custom SQL, t-digest ``quantiles`` KS baselines) are skipped — run the
-engine for those.
+see ``_psi_value``), and quantileDriftKs takes the plan's exact count-ifs
+at its baseline's points (``cdf`` or ``quantiles``), so per-slice drift
+verdicts cost zero extra passes and each slice's KS is the one ``test()``
+reports on that slice's rows. A KS baseline the plan rejects as
+malformed reads as a failing verdict with a NULL metric in every slice.
+Checks whose thresholds aren't expressible as Column math (timestamp
+SLAs, custom SQL) are skipped — run the engine for those.
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ from datacontract_cli_spark.engine.metric_plan import (
 )
 from datacontract_cli_spark.engine.predicates import _q, resolve_column
 from datacontract_cli_spark.model.contract import DataContract
+from datacontract_cli_spark.operators.drift import ks_column
 
 _SLICEABLE = (MetricType.ROW_COUNT, MetricType.MISSING_COUNT,
               MetricType.INVALID_COUNT, MetricType.QUANTILE,
@@ -78,15 +81,6 @@ def _psi_value(prefix: str, baseline: dict, n: Column) -> Column:
     novel = F.greatest(F.try_divide(n - total_known, n), eps)
     out = out + (novel - eps) * F.log(novel / eps)
     return out
-
-
-def _ks_value(prefix: str, points: list, n: Column) -> Column:
-    """Per-slice KS-at-points over the ``{prefix}le{j}`` aggregates —
-    the ks_by_group formulation inlined into the shared slice groupBy."""
-    terms = [F.abs(F.try_divide(F.col(f"{prefix}le{j}"), n)
-                   - F.lit(float(p)))
-             for j, (_x, p) in enumerate(points)]
-    return terms[0] if len(terms) == 1 else F.greatest(*terms)
 
 
 def _threshold_condition(spec: CheckSpec, value: Column,
@@ -158,23 +152,13 @@ def sliced_validation(df: DataFrame, contract: DataContract, model: str,
                              .alias(f"{alias}k{j}"))
             verdicts.append((spec, F.round(_psi_value(alias, baseline, n), 6)))
             continue
-        if spec.metric is MetricType.QUANTILE_DRIFT_KS:
-            points = (spec.baseline or {}).get("cdf")
-            if not points:      # t-digest 'quantiles' baselines are not
-                continue        # agg-able — run the engine for those
-            exprs.append(F.count(F.col(_q(column))).alias(f"{alias}n"))
-            for j, (x, _p) in enumerate(points):
-                exprs.append(F.sum(
-                    F.when(F.col(_q(column)) <= F.lit(float(x)), 1)
-                     .otherwise(0)).alias(f"{alias}le{j}"))
-            verdicts.append(
-                (spec, F.round(_ks_value(alias, points, F.col(f"{alias}n")),
-                               6)))
-            continue
         m = planned[alias]
-        if m.agg is not None:
+        if m.error is not None:  # malformed KS baseline: fail closed
+            verdicts.append((spec, None))
+        elif m.agg is not None:
             exprs.append(m.agg)
-            verdicts.append((spec, F.col(alias)))
+            verdicts.append((spec, F.col(alias) if m.points is None else
+                             F.round(ks_column(F.col(alias), m.points), 6)))
         else:  # the slice's row count, or an invalid check without constraints
             verdicts.append((spec, n
                              if spec.metric is MetricType.ROW_COUNT

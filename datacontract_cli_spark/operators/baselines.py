@@ -8,7 +8,8 @@ plugs them back into contract quality rules as ``arguments.baseline``.
 Baseline kinds:
 - categorical frequency vector (for freqDriftPsi)
 - numeric CDF points at fixed probes (for quantileDriftKs "cdf")
-- t-digest quantile map (for quantileDriftKs "quantiles" — the sketch path)
+- t-digest quantile map (for quantileDriftKs "quantiles": the sketch
+  drafts the points; the check counts exactly at them)
 """
 
 from __future__ import annotations

@@ -8,21 +8,25 @@ Beyond-reference operators mandated by the north rule (SURVEY.md §2.9):
   hash aggregate whose shuffle payload is one row per category) against a
   baseline {category: expected_fraction}.
 
-- **KS statistic** compares the observed distribution against a baseline CDF.
-  Two paths: ``baseline={"cdf": [[x, p], ...]}`` evaluates the empirical CDF
-  at the baseline's x-points in a single batched aggregation (exact, one
-  scan); ``baseline={"quantiles": {...}, "use_tdigest": true}`` sketches the
-  column with per-partition t-digests (operators/tdigest.py) and compares
-  CDFs at the baseline quantile values — the 100 TB path when the baseline
-  has many evaluation points.
+- **KS statistic** compares the observed distribution against a baseline
+  at the baseline's own points: ``{"cdf": [[x, p], ...]}`` or
+  ``{"quantiles": {q: x, ...}}`` (:func:`ks_points` turns both into one
+  (x, p) list). Counting the rows at or below each x gives F̂(x) exactly,
+  so KS = max_i |F̂(x_i) − p_i| is one aggregate of count-ifs
+  (:func:`ks_aggregate`) folded on the driver (:func:`ks_from_counts`) or
+  as Column math (:func:`ks_column`). The engine's ``quantileDriftKs``
+  check runs the same aggregate inside its batched metric job
+  (``engine/metric_plan.py``). t-digest sketches (operators/tdigest.py)
+  remain for :func:`ks_two_sample`, where no evaluation points are known
+  in advance.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Any, Dict, List
+from typing import Any, Dict, List, Sequence, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _EPS = 1e-6
@@ -198,26 +202,68 @@ def chi2_df(df: DataFrame, column: str, baseline: Dict[Any, float],
         (F.count(F.lit(1)) - 1).alias("df_degrees"))
 
 
+def ks_points(baseline: Any) -> List[Tuple[float, float]]:
+    """The (x, p) evaluation points of a KS baseline: ``cdf`` pairs as
+    given, ``quantiles`` {q: x} as (x, q). A malformed baseline (no
+    ``cdf``/``quantiles``, an empty one, a non-numeric x, p or q) raises
+    ValueError."""
+    if isinstance(baseline, dict) and "cdf" in baseline:
+        raw, kind = baseline["cdf"], "cdf"
+    elif isinstance(baseline, dict) and "quantiles" in baseline:
+        raw, kind = baseline["quantiles"], "quantiles"
+    else:
+        raise ValueError(
+            "KS baseline needs 'cdf': [[x, p], ...] or 'quantiles': {q: x}")
+    try:
+        pairs = ([(x, q) for q, x in raw.items()] if kind == "quantiles"
+                 else [(x, p) for x, p in raw])
+        points = [(float(x), float(p)) for x, p in pairs]
+    except (AttributeError, TypeError, ValueError) as e:
+        raise ValueError(f"malformed KS baseline '{kind}': {e}") from None
+    if not points:
+        raise ValueError(f"KS baseline '{kind}' is empty")
+    return points
+
+
+def ks_aggregate(col: Column, points: Sequence[Tuple[float, float]]) -> Column:
+    """One aggregate for KS at ``points``: struct(n = non-null count,
+    le = [count of values <= x_i]). It folds map-side like any count, so
+    it rides whatever aggregate it is placed in without a job of its
+    own."""
+    return F.struct(
+        F.count(col).alias("n"),
+        F.array(*[F.count_if(col <= F.lit(x)) for x, _p in points]).alias("le"))
+
+
+def ks_from_counts(n: int, le: Sequence[int],
+                   points: Sequence[Tuple[float, float]]) -> float:
+    """max_i |le_i / n − p_i|; NaN when no value was counted (an empty or
+    all-null column is unknown drift, never zero drift)."""
+    if not n:
+        return float("nan")
+    return max(abs(c / n - p) for c, (_x, p) in zip(le, points))
+
+
+def ks_column(counts: Column, points: Sequence[Tuple[float, float]]) -> Column:
+    """:func:`ks_from_counts` as Column math over a :func:`ks_aggregate`
+    struct; NULL when no value was counted (try_divide, never an ANSI
+    divide-by-zero)."""
+    terms = [F.abs(F.try_divide(counts["le"][i], counts["n"]) - F.lit(p))
+             for i, (_x, p) in enumerate(points)]
+    return terms[0] if len(terms) == 1 else F.greatest(*terms)
+
+
 def ks_df(df: DataFrame, column: str, points: List[List[float]],
           digits: int = 6) -> DataFrame:
     """Exact KS-at-points as a one-row DataFrame with zero driver
     round-trips (same declarative rationale as :func:`psi_df`): all the
     count-ifs fuse into ONE scan's aggregate, and the max-deviation fold
-    happens in the same plan via ``greatest`` — nothing is collected and
-    no local relation ships to the JVM."""
-    col = F.col(column)
-    aggs = [F.count(col).alias("__n__")]
-    for i, (x, _p) in enumerate(points):
-        aggs.append(F.sum(F.when(col <= F.lit(x), 1).otherwise(0))
-                    .alias(f"__le_{i}__"))
-    row = df.agg(*aggs)
-    # try_divide, like ks_by_group: an empty/all-null column (n=0) must
-    # yield ks NULL, not an ANSI divide-by-zero error
-    terms = [F.abs(F.try_divide(F.col(f"__le_{i}__"), F.col("__n__"))
-                   - F.lit(float(p)))
-             for i, (_x, p) in enumerate(points)]
-    ks = terms[0] if len(terms) == 1 else F.greatest(*terms)
-    return row.select(F.round(ks, digits).alias("ks"))
+    happens in the same plan — nothing is collected and no local relation
+    ships to the JVM."""
+    pts = ks_points({"cdf": points})
+    return (df.agg(ks_aggregate(F.col(column), pts).alias("__ks__"))
+              .select(F.round(ks_column(F.col("__ks__"), pts), digits)
+                      .alias("ks")))
 
 
 def ks_by_group(df: DataFrame, group_col: str, column: str,
@@ -234,57 +280,24 @@ def ks_by_group(df: DataFrame, group_col: str, column: str,
     projection on the tiny grouped frame. NULL group keys form their own
     row (they usually ARE the defect); groups with zero non-null values
     yield ks NULL rather than a spurious 0."""
-    col = F.col(column)
-    aggs = [F.count(col).alias("n")]
-    for i, (x, _p) in enumerate(points):
-        aggs.append(F.sum(F.when(col <= F.lit(x), 1).otherwise(0))
-                    .alias(f"__le_{i}__"))
-    g = df.groupBy(group_col).agg(*aggs)
-    # try_divide: an empty group (n=0) must yield ks NULL, not an ANSI
-    # divide-by-zero error
-    terms = [F.abs(F.try_divide(F.col(f"__le_{i}__"), F.col("n"))
-                   - F.lit(float(p)))
-             for i, (_x, p) in enumerate(points)]
-    ks = terms[0] if len(terms) == 1 else F.greatest(*terms)
-    return g.select(group_col, "n", F.round(ks, digits).alias("ks"))
+    pts = ks_points({"cdf": points})
+    g = df.groupBy(group_col).agg(ks_aggregate(F.col(column), pts).alias("__ks__"))
+    return g.select(group_col, F.col("__ks__.n").alias("n"),
+                    F.round(ks_column(F.col("__ks__"), pts), digits).alias("ks"))
 
 
 def ks_statistic(df: DataFrame, column: str, baseline: Dict[str, Any]) -> float:
-    if "cdf" in baseline:
-        points: List[List[float]] = baseline["cdf"]
-        return _ks_exact_at_points(df, column, points)
-    if "quantiles" in baseline:
-        from datacontract_cli_spark.operators.tdigest import sketch_column
-
-        digest = sketch_column(df, column)
-        if digest.means.size == 0:
-            # empty/all-null column: NaN (threshold.passes(None/NaN) is
-            # False, so the gate FAILS honestly), matching the exact-CDF
-            # lane — max(0.0, nan) would have reported zero drift
-            return float("nan")
-        worst = 0.0
-        for q_str, x in baseline["quantiles"].items():
-            p = float(q_str)
-            worst = max(worst, abs(digest.cdf(float(x)) - p))
-        return worst
-    raise ValueError("KS baseline needs 'cdf': [[x, p], ...] or 'quantiles': {q: x}")
+    """KS of ``column`` against a ``cdf`` or ``quantiles`` baseline, exact
+    at the baseline's points (:func:`ks_points`)."""
+    return _ks_exact_at_points(df, column, ks_points(baseline))
 
 
-def _ks_exact_at_points(df: DataFrame, column: str, points: List[List[float]]) -> float:
+def _ks_exact_at_points(df: DataFrame, column: str,
+                        points: Sequence[Sequence[float]]) -> float:
     """max_i |F̂(x_i) − p_i| with F̂ evaluated for every x_i in ONE aggregation
     pass (all the count-ifs fuse into a single scan)."""
-    col = F.col(column)
-    exprs = [F.count(col).alias("__n__")]
-    for i, (x, _p) in enumerate(points):
-        exprs.append(F.sum(F.when(col <= F.lit(x), 1).otherwise(0)).alias(f"__le_{i}__"))
-    row = df.agg(*exprs).collect()[0]
-    n = row["__n__"]
-    if not n:
-        return float("nan")
-    worst = 0.0
-    for i, (_x, p) in enumerate(points):
-        worst = max(worst, abs(row[f"__le_{i}__"] / n - float(p)))
-    return worst
+    row = df.agg(ks_aggregate(F.col(column), points).alias("k")).collect()[0]["k"]
+    return ks_from_counts(row["n"], row["le"], points)
 
 
 def ks_two_sample(df1: DataFrame, col1: str, df2: DataFrame, col2: str,

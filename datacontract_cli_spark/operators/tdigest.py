@@ -1,10 +1,13 @@
 """A compact merging t-digest (Dunning & Ertl, "Computing Extremely Accurate
 Quantiles Using t-Digests", arXiv:1902.04023) in pure numpy.
 
-Used by the drift checks to sketch text-length / numeric distributions: each
-Spark partition builds one digest inside an ``applyInPandas``/``mapInPandas``
-batch (vectorized, no per-row Python), the per-partition digests are merged
-on the driver (associative + commutative, so merge order doesn't matter for
+Used to draft ``quantiles`` drift baselines (``baselines.tdigest_baseline``)
+and for two-sample KS (``drift.ks_two_sample``), where no evaluation points
+are known in advance; the contract's quantileDriftKs check counts exactly
+at its baseline's points instead and never sketches. Each Spark partition
+builds one digest inside an ``applyInPandas``/``mapInPandas`` batch
+(vectorized, no per-row Python), the per-partition digests are merged on the
+driver (associative + commutative, so merge order doesn't matter for
 correctness; determinism is kept by sorting centroids before compression),
 and quantiles/CDF come from the merged digest. At 100 TB this moves only
 O(partitions × compression) floats to the driver.

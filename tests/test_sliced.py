@@ -140,3 +140,47 @@ def test_sliced_drift_checks_match_scalar_lane(spark):
     assert got[("a", "transcripts__role__freq_drift_psi")][1] is True
     assert got[("b", "transcripts__role__freq_drift_psi")][1] is False
     assert got[("b", "transcripts__n_chars__quantile_drift_ks")][1] is False
+
+
+_KS_QUANTILES_CONTRACT = """
+id: conv
+version: 1.0.0
+schema:
+  - name: transcripts
+    properties:
+      - name: n_chars
+        logicalType: number
+        quality:
+          - type: library
+            metric: quantileDriftKs
+            mustBeLessThan: 0.2
+            arguments:
+              baseline:
+                quantiles: {"0.5": 20, "0.9": 45}
+"""
+
+
+def test_sliced_quantiles_ks_matches_test_per_slice(spark):
+    from pyspark.sql import functions as F
+
+    from datacontract_cli_spark import SparkContractEngine
+
+    rows = ([("a", float(i)) for i in range(50)]          # near the baseline
+            + [("b", float(30 + i)) for i in range(40)]   # shifted up
+            + [("c", None)] * 3)                          # no values at all
+    df = spark.createDataFrame(rows, "src string, n_chars double")
+    contract = load_contract_str(_KS_QUANTILES_CONTRACT)
+    key = "transcripts__n_chars__quantile_drift_ks"
+
+    out = sliced_validation(df, contract, "transcripts", ["src"])
+    got = {r["src"]: (r["metric_value"], r["passed"]) for r in out.collect()
+           if r["check_key"] == key}
+    assert set(got) == {"a", "b", "c"}
+    engine = SparkContractEngine(spark)
+    for s, (value, passed) in got.items():
+        check = engine.test(contract, tables={
+            "transcripts": df.filter(F.col("src") == s)}).check(key)
+        assert value == check.diagnostics["value"], s
+        assert passed is (check.result.value == "passed"), s
+    assert got["a"][1] is True and got["b"][1] is False
+    assert got["c"] == (None, False)
